@@ -1,23 +1,17 @@
 package graft
+
+import scala.util.control.NonFatal
+
 object Bench {
 
-  private[graft] def benchFiles(pattern: String): Seq[java.io.File] = {
-    val dirs = Seq(new java.io.File("."), new java.io.File("/root/repo"))
-    // Canonicalize BEFORE distinct: when the CWD is /root/repo the two
-    // scan roots surface the same file under different path strings,
-    // and java.io.File equality is path-string-based (r12 advice) —
-    // "./BENCH_DETAIL_r12.json" and "/root/repo/BENCH_DETAIL_r12.json"
-    // would both survive a plain .distinct.
-    // Canonicalization does filesystem I/O and can throw (r13 advice:
-    // one unreadable entry must not kill the whole lint) — fall back
-    // per-file to the absolute path, which dedupes the common
-    // "./X vs /root/repo/X" case just as well.
-    dirs.flatMap(d => Option(d.listFiles()).toSeq.flatten)
+  /** Round files in the working directory matching `pattern`. Every
+    * bench artifact is read and written relative to where the bench
+    * runs (sbt forks `run` in the project base dir), so a sweep in one
+    * checkout never touches another checkout's files.
+    */
+  private[graft] def benchFiles(pattern: String): Seq[java.io.File] =
+    Option(new java.io.File(".").listFiles()).toSeq.flatten
       .filter(_.getName.matches(pattern))
-      .map(f => try f.getCanonicalFile
-        catch { case _: java.io.IOException => f.getAbsoluteFile })
-      .distinct
-  }
 
   /** Numeric fields of the summary JSON line that are NOT query names.
     * [[LintBench]] excludes exactly this set when diffing a
@@ -31,262 +25,74 @@ object Bench {
   val summaryNumericFields: Set[String] =
     Set("value", "nqueries", "timed", "loadavg_before", "loadavg_after")
 
-  /** Per-key plan fingerprint: hash of the key's OPTIMIZED logical
-    * plan text with the run-variant token classes normalized away —
-    * `#id` expression-id suffixes, synthetic lambda class names
-    * (`$$Lambda$3510/0x7f37...` — JDK counter + address, new every
-    * JVM), and JVM identity hashes (`@hex`, printed by objects with
-    * no toString). Deliberately NOT `.canonicalized`: canonicalization
-    * orders commutative operands and comparison sides by expression
-    * hashCode, and any subtree holding an identity-hashed object (a
-    * `Class` operand in MultiCommutativeOp, a lambda in a Dataset
-    * node) makes that ORDER differ per JVM — measured on 30/240 keys.
-    * The raw optimized text's order comes from the query code itself,
-    * which is exactly the stability contract a fingerprint needs.
-    * Written into BENCH_DETAIL next to the timings; the same-round
-    * min-merge keeps a PRIOR run's reading only when that run's
-    * fingerprint matches this run's (r15 verdict #3: a mid-round
-    * implementation change used to let the old code's faster reading
-    * survive the merge and seed drift floors for code that no longer
-    * exists). Cross-ROUND minima stay fingerprint-free on purpose:
-    * they feed the retry and drift heuristics, where a stale-but-
-    * tight floor is conservative, and LintBench.acceptedFloors is
-    * their adjudication mechanism.
+  /** Identity of the code a sweep measured: SHA-256 over the sorted
+    * relative paths and bytes of every file under `root/src/main`, plus
+    * `root/build.sbt`. Any source edit — a comment included — yields a
+    * new id. Empty when `src/main` is missing, which merges nothing.
     */
-  private[graft] def normalizedPlanText(
-      df: org.apache.spark.sql.DataFrame,
-      maskEnvWidths: Boolean = true): String = {
-    val plan = df.queryExecution.optimizedPlan
-    // Checkpoint-lineage expansion (r19): a localCheckpoint truncates
-    // the plan to a LogicalRDD leaf, making every upstream code change
-    // fingerprint-INVISIBLE — corpus_curate's r19 candidate-stage
-    // restructure kept its fingerprint and the board carried the old
-    // code's minimum (the r15-verdict stale-prior class, through the
-    // blind spot the r18 verdict #4 named). [[Ckpt]] registers each
-    // checkpoint child's normalized-text hash; appending the reachable
-    // hashes here makes a hidden change flip the fingerprint like any
-    // visible one.
-    normalizeText(plan.toString, maskEnvWidths) + Ckpt.lineageTag(plan)
-  }
-
-  /** The raw text normalization behind [[normalizedPlanText]], shared
-    * with [[Ckpt]] so checkpoint-child hashes use the identical
-    * env-stability contract.
-    */
-  private[graft] def normalizeText(
-      txt: String, maskEnvWidths: Boolean = true): String = {
-    val base = txt
-      .replaceAll("#\\d+", "#x")
-      .replaceAll("\\$\\$Lambda\\$?[0-9]*/0x[0-9a-fA-F]+", "\\$\\$Lambda")
-      .replaceAll("@[0-9a-fA-F]{4,}", "@x")
-      // plan_id: a session-global physical-plan counter — keys whose
-      // logical plan embeds executed fragments (cached/checkpointed
-      // subtrees print their Exchange with [plan_id=N]) would
-      // otherwise fingerprint differently per run position.
-      .replaceAll("plan_id=\\d+", "plan_id=x")
-    // ENVIRONMENT-derived partition counts (r16 verdict #1): the
-    // per-row-expensive spreads repartition to defaultParallelism,
-    // so the CORE COUNT enters the plan text — `Repartition N, true`
-    // in the logical tree and `RoundRobinPartitioning(N)` inside
-    // cached InMemoryRelation physical fragments. The builder's
-    // sweep JVM and the driver's bench JVM run different local[N],
-    // so exactly the 20 spread-carrying keys fingerprint-mismatched
-    // and the driver's loaded re-run discarded their quiet committed
-    // minima (+4.5 s on the official r16 artifact). Measured: with
-    // these two classes normalized, 8-core and 32-core sessions in
-    // different CWDs/tmpdirs produce byte-identical normalized text
-    // for all affected keys. A CODE change to a repartition count
-    // no longer invalidates priors — acceptable: the drift lint
-    // still catches a timing shift, and an env knob must never
-    // poison the merge. The r17-advice residual — a deliberate CODE
-    // change to a repartition count is fingerprint-INVISIBLE, so only
-    // the one-sided drift lint would notice — is covered by the
-    // WIDTH-SENSITIVE secondary fingerprint ([[widthFingerprint]]):
-    // recorded in FpDump output (never merged on, since it embeds the
-    // core count by construction), so a same-environment FpDump diff
-    // across code versions names exactly a width change.
-    if (maskEnvWidths)
-      base.replaceAll("Repartition \\d+", "Repartition n")
-        .replaceAll("RoundRobinPartitioning\\(\\d+\\)",
-          "RoundRobinPartitioning(n)")
-    else base
-  }
-
-  /** Shape lint for the normalized plan text: token classes that vary
-    * per JVM or per ENVIRONMENT and would silently poison the
-    * fingerprint min-merge if a new plan shape smuggled one past the
-    * normalizer. Checked for EVERY key by PlanSpec's engine-wide sweep
-    * and by FpDump, so the contract is "no env-variant residue in any
-    * key's normalized text", not just "two runs happened to agree"
-    * (r16 verdict #1: the two-JVM diff passed because both JVMs shared
-    * the builder's environment).
-    */
-  private[graft] def planTextShapeViolations(txt: String): Seq[String] = {
-    val classes: Seq[(String, scala.util.matching.Regex)] = Seq(
-      "exprId residue (#N)" -> "#\\d".r,
-      "identity hash residue (@hex)" -> "@[0-9a-fA-F]{4,}".r,
-      "lambda counter residue" -> "\\$\\$Lambda\\$?\\d".r,
-      "plan_id residue" -> "plan_id=\\d".r,
-      "core-count Repartition residue" -> "Repartition \\d".r,
-      "core-count RoundRobinPartitioning residue" ->
-        "RoundRobinPartitioning\\(\\d".r,
-      // Shuffle-partition counts inside cached physical fragments:
-      // no key's text carries these today (verified engine-wide); if
-      // one ever does, fail loudly so the count gets normalized
-      // instead of silently splitting fingerprints across envs.
-      "shuffle-partition residue (hashpartitioning)" ->
-        "hashpartitioning\\(".r,
-      "shuffle-partition residue (rangepartitioning)" ->
-        "rangepartitioning\\(".r,
-      // tmpdir/scratch paths differ per environment; input fixture
-      // paths (/root/testdata) are the contract and allowed. The
-      // cube DataSource's staged GENESIS fixtures are DETERMINISTIC
-      // absolute constants (plans/CubeOps.fixturePath — not
-      // java.io.tmpdir-derived, no PID/random component; verified
-      // stable builder-vs-driver in r16), so they're masked before
-      // the check: the rule targets RANDOM scratch paths.
-      "tmpdir path residue" -> "/tmp/".r)
-    val masked =
-      txt.replaceAll("/tmp/graft_cube_[A-Za-z0-9_.]+", "<cube-fixture>")
-    classes.flatMap { case (label, re) =>
-      re.findFirstIn(masked).map { m =>
-        val i = masked.indexOf(m)
-        val ctx = masked.substring(math.max(0, i - 40),
-          math.min(masked.length, i + 40)).replaceAll("\\s+", " ")
-        s"$label: …$ctx…"
-      }
+  private[graft] def buildId(root: java.io.File): String = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val base = root.toPath
+    val main = base.resolve("src/main")
+    if (!Files.isDirectory(main)) return ""
+    val walk = Files.walk(main)
+    val files =
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).toVector
+      finally walk.close()
+    val all = (files ++ Some(base.resolve("build.sbt")).filter(Files.isRegularFile(_)))
+      .map(p => base.relativize(p).toString -> p)
+      .sortBy(_._1)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    all.foreach { case (rel, p) =>
+      val bytes = Files.readAllBytes(p)
+      // Path and length frame each file, so no two trees hash alike
+      // by shifting bytes across a file boundary.
+      md.update(s"$rel\u0000${bytes.length}\u0000".getBytes("UTF-8"))
+      md.update(bytes)
     }
+    md.digest().map(b => f"$b%02x").mkString
   }
 
-  private[graft] def hash6(txt: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(txt.getBytes("UTF-8")).take(6)
-      .map(b => f"$b%02x").mkString
+  private val timePair = """"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
 
-  private[graft] def planFingerprint(df: org.apache.spark.sql.DataFrame): String =
-    hash6(normalizedPlanText(df))
-
-  /** Width-SENSITIVE variant: same normalization but with the
-    * environment-derived partition widths (`Repartition N` /
-    * `RoundRobinPartitioning(N)`) left intact. Never written to
-    * BENCH_DETAIL and never merged on — it embeds the session's core
-    * count, so it differs across environments by construction. Its one
-    * job (r17 advice): in a SAME-environment FpDump diff across code
-    * versions, a deliberate code change to a repartition count — which
-    * the merge fingerprint deliberately cannot see — shows up as a
-    * width-hash delta, so the change is at least visible evidence
-    * rather than relying solely on the one-sided drift lint.
+  /** Per-key times of a BENCH_DETAIL / BENCH_FRESH file: the numeric
+    * pairs before the embedded summary.
     */
-  private[graft] def widthFingerprint(df: org.apache.spark.sql.DataFrame): String =
-    hash6(normalizedPlanText(df, maskEnvWidths = false))
+  private[graft] def queryTimes(txt: String): Map[String, Double] =
+    timePair.findAllMatchIn(txt.split("\"summary\"").head)
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
 
-  /** Scrape a BENCH_DETAIL file's `"plans"` section (key → fingerprint
-    * hex). Older-format files have no such section → empty map, which
-    * makes every prior reading unverifiable and therefore dropped by
-    * [[mergeDetail]] — strict by design: a reading that cannot prove
-    * it measured the current plan is not evidence for it.
-    */
-  private[graft] def scrapePlans(txt: String): Map[String, String] = {
-    val section = txt.split("\"plans\"", 2)
-    if (section.length < 2) Map.empty
-    else """"([A-Za-z0-9_]+)":"([0-9a-f]+)"""".r
-      .findAllMatchIn(section(1).split("\"summary\"").head)
-      .map(m => m.group(1) -> m.group(2)).toMap
-  }
+  /** The `"build"` id a detail file was written under, if any. */
+  private def buildOf(txt: String): Option[String] =
+    """"build":"([0-9a-f]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
 
-  /** Fingerprint-guarded min-merge against ONE prior detail file. A
-    * prior reading survives only when (a) THIS run produced a real
-    * time for the key (current error sentinel always wins — broken ≠
-    * fast), and (b) the prior file carries a fingerprint for the key
-    * equal to this run's (same plan text ⇒ same code measured).
-    * Exposed for LintBenchSpec: a mid-round implementation change must
-    * invalidate that key's prior minima while everything else still
-    * min-merges. Used both same-round (re-runs merge into the round's
-    * own detail file) and cross-round (see [[seedFromPriors]]).
+  /** Same-build min-merge against ONE prior detail file. Prior readings
+    * count only when the prior file was written by the same non-empty
+    * [[buildId]]; anything else measured other code and merges
+    * nothing. This run's error sentinel always wins (broken ≠ fast),
+    * and the merged key set is exactly this run's, so a prior key that
+    * is no longer declared is dropped.
     */
   private[graft] def mergeDetail(
       current: Seq[(String, Double)],
-      currentPlans: Map[String, String],
-      priorTxt: String,
-      declared: Set[String]): Seq[(String, Double)] = {
-    val qline = priorTxt.split("\"plans\"").head.split("\"summary\"").head
-    val priorTimes = """"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
-      .findAllMatchIn(qline)
-      .map(m => m.group(1) -> m.group(2).toDouble)
-      .filter { case (k, v) => v >= 0 && declared.contains(k) }
-      .toMap
-    val priorPlans = scrapePlans(priorTxt)
+      build: String,
+      priorTxt: String): Seq[(String, Double)] = {
+    val prior =
+      if (build.nonEmpty && buildOf(priorTxt).contains(build))
+        queryTimes(priorTxt).filter(_._2 >= 0)
+      else Map.empty[String, Double]
     current.map { case (k, v) =>
-      val usable = priorTimes.get(k).filter { _ =>
-        priorPlans.get(k).exists(h => currentPlans.get(k).contains(h))
-      }
-      k -> (if (v < 0) -1.0
-            else math.min(v, usable.getOrElse(Double.MaxValue)))
+      k -> (if (v < 0) -1.0 else math.min(v, prior.getOrElse(k, v)))
     }
   }
 
-  /** Chain [[mergeDetail]] over several prior detail files — the
-    * round's own file first (same-round re-run merge), then the
-    * PREVIOUS round's (r17 verdict #1: cross-round seeding). Now that
-    * fingerprints are environment-stable (r17), a prior round's quiet
-    * minimum is valid evidence for exactly the keys whose plan text is
-    * byte-identical — a code change flips the fingerprint and rejects
-    * the carry automatically, the same guard the same-round merge
-    * already trusts. This makes the official board immune to a round
-    * of bad weather: r17's sweeps were all wave-hit and 200
-    * unchanged-fingerprint keys read a few ms above their r16 quiet
-    * minima (+3.5 s of pure ambient noise on the committed artifact).
-    * Only ONE round back is consulted: each round's file already
-    * carries its own seeded history forward, so the chain is
-    * transitive without scanning the whole archive, and a key whose
-    * plan changes then changes back within a round still re-seeds no
-    * further than evidence exists for.
-    */
-  private[graft] def seedFromPriors(
-      current: Seq[(String, Double)],
-      currentPlans: Map[String, String],
-      priorTexts: Seq[String],
-      declared: Set[String]): Seq[(String, Double)] =
-    priorTexts.foldLeft(current)((acc, txt) =>
-      mergeDetail(acc, currentPlans, txt, declared))
-
-  /** Per-query minima across committed bench history — the noise floor
-    * each new measurement is sanity-checked against. Sources, in trust
-    * order (r8): BENCH_DETAIL_r*.json (complete per-query maps written
-    * by [[main]] itself — the driver's log-tail BENCH_r*.json capture
-    * head-truncates the map line, silently dropping every key
-    * alphabetically before ~"filter_null") plus BENCH_r{N}.json for
-    * N ≥ 7 only: r1–r6 timed `.count()`, which let the optimizer prune
-    * projections/sorts, so those minima are 2–5× flattering vs the
-    * noop-sink methodology and would freeze retry thresholds at
-    * unreachable values. Minimal JSON scrape (no parser deps): every
-    * `"name":number` pair; non-query fields ("value") match no query
-    * name and -1 error sentinels are skipped.
-    */
-  private def crossRoundMins(): Map[String, Double] = {
-    val files = benchFiles("BENCH_DETAIL_r\\d+\\.json") ++
-      benchFiles("BENCH_r\\d+\\.json").filter { f =>
-        f.getName.stripPrefix("BENCH_r").stripSuffix(".json")
-          .toIntOption.exists(_ >= 7)
-      }
-    // Committed BENCH files embed the bench line ESCAPED inside a
-    // "tail" string (\"join_left\":0.27…) — tolerate one backslash
-    // before each quote so the scrape works on both raw and embedded
-    // forms.
-    val pair = """\\?"([A-Za-z0-9_]+)\\?":(-?[0-9]+(?:\.[0-9]+)?)""".r
-    files.flatMap { f =>
-      val txt = try scala.io.Source.fromFile(f).mkString catch { case _: Throwable => "" }
-      pair.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble)
-    }.filter(_._2 >= 0)
-      .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
-  }
-
   /** Round number this run belongs to: committed artifacts exist for
-    * every PAST round (the driver commits BENCH_r{N}.json at round end,
-    * and this main writes BENCH_DETAIL_r{N}.json during round N), so
-    * the current round is one past the highest committed BENCH_r*, or
-    * the highest BENCH_DETAIL_r* if that's newer (a re-run within the
-    * same round overwrites its own detail file rather than advancing).
+    * every PAST round (BENCH_r{N}.json is committed at round end, and
+    * this main writes BENCH_DETAIL_r{N}.json during round N), so the
+    * current round is one past the highest committed BENCH_r*, or the
+    * highest BENCH_DETAIL_r* if that's newer (a re-run within the same
+    * round overwrites its own detail file rather than advancing).
     */
   private def currentRound(): Int = {
     def rounds(pat: String, pre: String) = benchFiles(pat).flatMap(
@@ -300,11 +106,22 @@ object Bench {
   private def loadavg(): Double =
     try scala.io.Source.fromFile("/proc/loadavg").mkString
       .split(" ").head.toDouble
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
+
+  /** One stderr line naming what failed; artifact I/O never fails the
+    * bench and never adds to stdout.
+    */
+  private def warn(what: String, e: Throwable): Unit =
+    System.err.println(s"bench: $what failed: $e")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // Taken before anything runs: the id describes the tree the sweep
+    // was launched from, even if a file is edited mid-sweep.
+    val build =
+      try buildId(new java.io.File("."))
+      catch { case NonFatal(e) => warn("build id of src/main", e); "" }
     val spark = GraftSession.local(cpus.toInt)
     val loadBefore = loadavg()
     // Full materialization via the noop sink, NOT count(): under
@@ -315,36 +132,25 @@ object Bench {
     // under-report at sf0.1. The noop write evaluates every output
     // column and keeps the sort, with zero sink I/O. (r7 methodology
     // change: numbers are NOT comparable to the count()-based r1-r6
-    // history; cross-round retry minima just get conservative.)
+    // history.)
     // Pins cleared after every run (r11): a pin left live by an
     // earlier key (or the warm-up pass) taxes every subsequent plan
     // compilation via the CacheManager canonicalization walk — each
     // key's timing must be its own cost, fresh-session honest.
-    // Plan fingerprints are captured on the UNTIMED warm-up pass (the
-    // optimized plan is computed during execution anyway; stringify +
-    // hash is ~ms and must not land inside a timed run). Keys that
-    // error before producing a plan simply have no fingerprint — their
-    // reading is the -1 sentinel, which never merges.
-    var plans = Map.empty[String, String]
-    def run(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
+    def run(fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Unit =
-      try {
-        val df = fn(spark, sfDir)
-        df.write.format("noop").mode("overwrite").save()
-        if (!plans.contains(name))
-          plans += name -> (try planFingerprint(df)
-            catch { case _: Throwable => "" })
-      } finally Pins.clearAll()
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      finally Pins.clearAll()
     // Untimed warm-up pass: JVM/codegen/session init otherwise lands on
     // whichever query happens to run first (~10 s of noise in round 1).
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try { run(name, fn) } catch { case _: Throwable => () }
+    SparkEntry.queries.foreach { case (_, fn) =>
+      try run(fn) catch { case _: Throwable => () }
     }
     var errors = List.empty[String]
     def once(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { run(name, fn) } catch {
+      try run(fn) catch {
         case _: Throwable =>
           if (!errors.contains(name)) errors ::= name
           return -1.0 // broken ≠ fast: never report time-to-throw
@@ -358,118 +164,37 @@ object Bench {
     // two runs still disagree >2× (ambient spike hit both), one extra
     // run arbitrates — bounded cost, and it stops a 48 s noise spike
     // masquerading as a 1.7 s query's time (measured on this box).
-    // (Budget line: anything over the 2 s per-query budget ALSO earns
-    // end-of-sweep retries regardless of history — r6's dedup_cluster
-    // 3.36 s sat under 3× its 1.52 s cross-round min, so the relative
-    // trigger alone let an over-budget number land undefended.)
-    val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    // `retried` lists the keys that got that third run.
+    var retried = List.empty[String]
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val two = Seq(once(name, fn), once(name, fn)).filter(_ >= 0)
       val best =
         if (two.isEmpty) -1.0
-        else if (two.size == 2 && two.max > 2 * two.min && two.max > 1.0)
+        else if (two.size == 2 && two.max > 2 * two.min && two.max > 1.0) {
+          retried ::= name
           (once(name, fn) +: two).filter(_ >= 0).min
-        else two.min
+        } else two.min
       name -> best
-    }
-    // End-of-sweep outlier retries (round-3 verdict): a multi-minute
-    // ambient spike can swallow all three attempts of a whole
-    // alphabetical band (r3: join_* band measured 24-27 s vs 0.3-0.8 s
-    // cross-round minima). Extra attempts AFTER the full sweep —
-    // minutes later, when the spike has likely moved — for any query
-    // measured above 2× its own committed cross-round minimum (r9
-    // verdict #4: at 3× the committed map still carried four >2 s
-    // readings that quiet hand-timing showed were 1.4-1.8 s keys, so
-    // every round needed judge-side re-adjudication; 2× makes the
-    // committed numbers quiet-box honest — a key still above 2× after
-    // the passes shows in `retried` as recorded exhaustion); up to
-    // three passes with a 30 s pause between them, so a spike that
-    // covers the END of the sweep can't poison the retries too. A key
-    // with no committed history (added this round) uses a 1.0 s
-    // floor — 2 × 1.0 = the 2 s per-query budget, so a new key earns
-    // a retry exactly when it posts an over-budget reading. Zero cost on a
-    // quiet run (no outliers → no passes, no sleeps); the 0.5 s floor
-    // keeps trivial keys (where 2× min is scheduling jitter) out of
-    // the retry loop.
-    // r11 (r10 verdict #4): the 2×-min trigger has a blind band for
-    // expensive keys — a ~1 s-min key's threshold is exactly the 2 s
-    // budget, so 2.0-2.3 s readings retried only via the budget rule
-    // and, when the retry landed under load, committed numbers the
-    // judge had to re-time by hand every round. For keys whose own
-    // committed minimum exceeds 0.9 s, anything more than 0.5 s above
-    // that minimum is now an outlier too: scheduling jitter never
-    // reaches +0.5 s on a >0.9 s key (measured spread on quiet runs is
-    // ±0.2 s), so the extra retries are load-spike arbitration, not
-    // noise-chasing — and the committed map becomes self-adjudicating.
-    val mins = crossRoundMins()
-    var retried = List.empty[String]
-    var results = firstPass
-    // r17 (driver round 14): two retry-policy changes, both from a
-    // night of wave-shaped ambient load (four consecutive sweeps
-    // poisoned mid-run — loadavg 0.3 at launch, 4-5 ten minutes in):
-    //   1. The retry trigger now includes the LINT drift line — any
-    //      reading more than driftSlackSec over its cross-round min
-    //      (with a 0.55 s floor so trivial keys' scheduling jitter
-    //      stays out) gets re-measured. Previously a 1.05 s-min key
-    //      reading 1.52 sailed through (threshold was min+0.5 only
-    //      above 0.9 s, 2×min only above 0.5 s) and then FAILED the
-    //      round-close drift check two rounds running.
-    //   2. Retry passes WAIT OUT the load wave instead of sleeping a
-    //      fixed 30 s inside it: poll the 1-min loadavg until it
-    //      drops under 2.0 (the quiet-box line BASELINE.md encodes),
-    //      bounded by a shared 8-minute budget so a permanently busy
-    //      box cannot hang the bench. The own-run contribution decays
-    //      within ~2 polls of idling, so the gate is reachable.
-    // The drift line mirrors LintBench exactly, INCLUDING its
-    // adjudicated floor re-pins (r15 advice): comparing against the
-    // raw cross-round min would make every adjudicated key (e.g.
-    // ts_anomaly, whose r12 1.03 s is a single lucky sweep below the
-    // accepted 1.2 s floor) trip the retry on every honest reading,
-    // burning all three passes and the shared quiet budget on numbers
-    // the lint would accept anyway.
-    def isOutlier(name: String, best: Double): Boolean =
-      best >= 0 &&
-        ((best > 2 * mins.getOrElse(name, 1.0) && best > 0.5) ||
-          best > 2.0 ||
-          mins.get(name).exists { m0 =>
-            val m = math.max(m0, LintBench.acceptedFloors.getOrElse(name, 0.0))
-            best > m + LintBench.driftSlackSec && best > 0.55
-          })
-    var quietWaitMs = 480000L
-    def awaitQuiet(): Unit =
-      while (quietWaitMs > 0 && loadavg() > 2.0) {
-        Thread.sleep(30000); quietWaitMs -= 30000
-      }
-    var pass = 0
-    while (pass < 3 && results.exists { case (n, b) => isOutlier(n, b) }) {
-      awaitQuiet()
-      if (pass > 0) Thread.sleep(30000)
-      results = results.map { case (name, best) =>
-        if (isOutlier(name, best)) {
-          if (!retried.contains(name)) retried ::= name
-          val again = once(name, SparkEntry.queries(name))
-          name -> (if (again >= 0) math.min(best, again) else best)
-        } else name -> best
-      }
-      pass += 1
     }
     // 3-decimal times: ms precision; sub-ms is noise at these scales
     // and shorter entries keep the per-query line small.
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-      .mkString("{", ",", "}")
+    def timesJson(ts: Seq[(String, Double)]): String =
+      ts.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
+        .mkString("{", ",", "}")
     val errs = errors.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val retr = retried.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
     // TWO lines, per-query map FIRST, short summary LAST. At ~90 keys
-    // the map alone is ~2 KB and the driver keeps only the last
-    // ~2.3 KB of the log, so a single combined line loses its HEAD —
-    // including "metric":"total" — to truncation (BENCH_r04/r05 both
-    // landed parsed:null this way). Head-truncating the map line is
-    // harmless (cross-round minima come from committed history and the
-    // summary repeats the headline), but the summary line must always
-    // fit the tail window intact, so it is last and <400 bytes.
-    println(s"""{"metric":"queries","queries":$qs,"sf":"$sfDir"}""")
+    // the map alone is ~2 KB and only the last ~2.3 KB of the log is
+    // kept, so a single combined line loses its HEAD — including
+    // "metric":"total" — to truncation (BENCH_r04/r05 both landed
+    // parsed:null this way). Head-truncating the map line is harmless
+    // (the full map goes to BENCH_FRESH/BENCH_DETAIL and the summary
+    // repeats the headline), but the summary line must always fit the
+    // tail window intact, so it is last and <400 bytes.
+    println(s"""{"metric":"queries","queries":${timesJson(results)},"sf":"$sfDir"}""")
     // loadavg before/after make a loaded run self-describing: a high
     // pair says "numbers include ambient noise", without guessing.
     // `value` sums only the TIMED keys (errors report -1, excluded), so
@@ -481,87 +206,37 @@ object Bench {
     // Keep the summary's numeric keys inside the shared constant (see
     // [[summaryNumericFields]]) — a drifted field would otherwise make
     // LintBench flag it as a stale query key at round close.
-    val summaryNumeric = """"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
-      .findAllMatchIn(summary).map(_.group(1)).toSet
+    val summaryNumeric = timePair.findAllMatchIn(summary).map(_.group(1)).toSet
     require(summaryNumeric.subsetOf(summaryNumericFields),
       s"summary numeric fields drifted from Bench.summaryNumericFields: " +
         (summaryNumeric -- summaryNumericFields).mkString(","))
     println(summary)
-    // COMMITTED detail artifact (r7 verdict #1): the driver records
-    // only the last ~2.3 KB of stdout, which head-truncates the
-    // per-query map at ~108 keys — every key alphabetically before the
-    // cut (all agg_*/cube_*/dedup_*…) lost its r7 time that way, and
-    // crossRoundMins() then freezes on stale history. Writing the FULL
-    // map to a file in the repo makes per-query history lossless; the
-    // stdout lines above stay as the driver-facing summary.
-    // Same-round re-runs MIN-MERGE into the existing detail file
-    // (r17): a re-run used to overwrite it, so the round's evidence
-    // was whichever run happened LAST — on a box with wave-shaped
-    // ambient load (four consecutive sweeps poisoned in different
-    // alphabetical bands the same night) that threw away every quiet
-    // reading an earlier run had already captured. Per-key min across
-    // genuine full-methodology runs is the same one-sided-noise
-    // estimator the in-run min-of-2 and retry passes already use; the
-    // summary line stays THIS run's (loadavg and retries self-describe
-    // it), and only currently-declared keys survive the merge (a key
-    // removed mid-round cannot linger as a stale lint hit).
-    try {
-      val round = currentRound()
-      val path = s"/root/repo/BENCH_DETAIL_r$round.json"
-      def readIfExists(p: String): String = {
-        val f = new java.io.File(p)
+    // Two artifacts in the working directory, both carrying the build
+    // id they measured:
+    //   - BENCH_FRESH_r{N}.json: THIS run's readings verbatim,
+    //     overwritten whole on every run — the round measurement;
+    //   - BENCH_DETAIL_r{N}.json: the round board. A re-run of the SAME
+    //     build min-merges per key into it (another sweep of unchanged
+    //     code is the one remedy for load noise); a run of any other
+    //     build replaces it, so the board only ever holds readings of
+    //     the code it names.
+    val round = currentRound()
+    // Files.writeString, not PrintWriter: a PrintWriter swallows write
+    // errors, and a failed write must name itself on stderr.
+    def write(path: String, times: Seq[(String, Double)]): Unit =
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+        s"""{"queries":${timesJson(times)},"build":"$build","summary":$summary}""" + "\n")
+      catch { case NonFatal(e) => warn(s"write of $path", e) }
+    val detail = s"BENCH_DETAIL_r$round.json"
+    val prior =
+      try {
+        val f = new java.io.File(detail)
         if (!f.exists()) ""
-        else try scala.io.Source.fromFile(f).mkString
-          catch { case _: Throwable => "" }
-      }
-      val priorTxt = readIfExists(path)
-      // Cross-round seed (r17 verdict #1): the previous round's board
-      // is a valid prior for exactly the unchanged-fingerprint keys.
-      val prevRoundTxt =
-        readIfExists(s"/root/repo/BENCH_DETAIL_r${round - 1}.json")
-      // An ERROR in the current run always wins the merge (r15 advice):
-      // letting a prior run's positive time survive when THIS run's
-      // reading is the -1 sentinel would show a key broken by a
-      // mid-round change as green in the committed map — inverting the
-      // "broken ≠ fast" rule the error sentinel exists for. And a prior
-      // reading merges ONLY when its committed plan fingerprint equals
-      // this run's (r15 verdict #3): a mid-round implementation change
-      // invalidates that key's prior minima, so the round's evidence
-      // can never be a faster reading of code that no longer exists.
-      // The fingerprints written below are THIS run's, so the artifact
-      // always describes the newest code.
-      val merged = seedFromPriors(results, plans,
-          Seq(priorTxt, prevRoundTxt), SparkEntry.queries.keySet)
-        .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      val planJson = results.map { case (k, _) =>
-        s"\"" + k + "\":\"" + plans.getOrElse(k, "") + "\""
-      }.mkString("{", ",", "}")
-      val out = new java.io.PrintWriter(path)
-      try out.println(
-        s"""{"queries":$merged,"plans":$planJson,"summary":$summary}""")
-      finally out.close()
-      // FRESH-RUN artifact (r18 verdict #1): the driver's PERF
-      // round-over-round per-query table was dark two rounds running —
-      // its ~2.3 KB stdout tail head-truncates the per-query line, and
-      // BENCH_DETAIL deliberately has FLOOR semantics (min-merged over
-      // the round's sweeps + seeded from the prior round's minima), so
-      // it must never be read as a round measurement. This file is the
-      // missing honest artifact: THIS invocation's results verbatim —
-      // no merge, no seeding, overwritten whole on every run — plus the
-      // same self-describing summary (loadavg pair, retries). Same
-      // {"queries","plans","summary"} shape as the detail file so every
-      // existing scrape works; LintBench additionally gates its key set
-      // at round close.
-      val freshQs = results
-        .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
-      val freshOut = new java.io.PrintWriter(
-        s"/root/repo/BENCH_FRESH_r$round.json")
-      try freshOut.println(
-        s"""{"queries":$freshQs,"plans":$planJson,"summary":$summary}""")
-      finally freshOut.close()
-    } catch { case _: Throwable => () } // artifact write must never fail the bench
+        else java.nio.file.Files.readString(f.toPath,
+          java.nio.charset.StandardCharsets.UTF_8)
+      } catch { case NonFatal(e) => warn(s"read of $detail", e); "" }
+    write(detail, mergeDetail(results, build, prior))
+    write(s"BENCH_FRESH_r$round.json", results)
     spark.stop()
   }
 }

@@ -50,10 +50,7 @@ object BoardReport {
       try scala.io.Source.fromFile(x).mkString catch { case _: Throwable => "" }
     }.getOrElse("")
     val corr = parseCorrectness(read(corrFile))
-    val benchTxt = read(benchFile)
-    val bench = """"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
-      .findAllMatchIn(benchTxt.split("\"plans\"").head.split("\"summary\"").head)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    val bench = Bench.queryTimes(read(benchFile))
     val sb = new StringBuilder
     sb ++= s"# Board — ${corrFile.map(_.getName).getOrElse("(no correctness)")}"
     sb ++= s" × ${benchFile.map(_.getName).getOrElse("(no bench detail)")}\n\n"

@@ -1,84 +1,22 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.LogicalRDD
 
-/** Lineage-registered lazy localCheckpoint — the engine's ONE way to
-  * cut a plan (r19, from a measured fingerprint blind spot).
+/** Lazy local checkpoint — the engine's one way to cut a plan.
   *
-  * A checkpoint truncates the DataFrame's logical plan to a bare
-  * `LogicalRDD` leaf, so [[Bench.planFingerprint]] — the guard that
-  * decides whether a PRIOR bench reading still describes the current
-  * code — cannot see ANY change made upstream of a checkpoint. That is
-  * exactly the stale-prior failure the fingerprint exists to prevent
-  * (r15 verdict #3), and it fired for real in r19: corpus_curate's
-  * minhash candidate stage was restructured, its fingerprint did not
-  * move (the change sits behind the pairs checkpoint), and the board
-  * carried the OLD code's minimum for the NEW code.
-  *
-  * Fix: every lazy local checkpoint routes through [[local]], which
-  * hashes the CHILD plan's normalized text (the same normalization the
-  * top-level fingerprint uses — exprIds, plan_ids, lambda names, env
-  * widths all masked) plus, transitively, the lineage hashes of any
-  * checkpoint leaves already inside the child, and registers that hash
-  * against the checkpoint's RDD id. [[lineageTag]] then lets the
-  * fingerprint append the reachable lineage hashes, so a change
-  * anywhere under a checkpoint flips the key's fingerprint and
-  * invalidates its priors — same contract as a visible plan change.
-  * Registration is same-JVM by construction: the fingerprint is
-  * computed in the same session that built the checkpoint (Bench's
-  * warm-up pass), and an UNREGISTERED leaf (a checkpoint not built
-  * through this helper, e.g. by an embedding application) simply
-  * contributes no tag — the pre-r19 behavior, never an error.
-  *
-  * Runtime cost: one toString + regex pass over an already-optimized
-  * plan per checkpoint construction (~ms, driver-side, once per
-  * invocation — the plan was just computed by localCheckpoint's own
-  * toRdd). The registry holds a 12-hex-char string per checkpoint RDD.
+  * `df.localCheckpoint(eager = false)`: the frame materializes on its
+  * first action into executor-local blocks, and its logical plan becomes
+  * a bare `LogicalRDD` leaf. That leaf hides the upstream subtree from
+  * plan audits, and losing an executor loses the blocks (no lineage
+  * recompute), so it suits local runs, not fault-tolerant production
+  * jobs. Every checkpoint site routes through here so the primitive can
+  * change in one place.
   */
 object Ckpt {
-  private val reg = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-
-  /** `df.localCheckpoint(eager = false)` with the child plan's lineage
-    * hash registered for fingerprint expansion.
-    */
-  def local(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(false)
-    // Registration must never fail the query — a throwing plan
-    // stringify (or an unexpected analyzed shape) just leaves the
-    // leaf untagged, which is the honest pre-r19 fingerprint.
-    try {
-      val h = lineageHash(df.queryExecution.optimizedPlan)
-      out.queryExecution.analyzed.collectLeaves().foreach {
-        case l: LogicalRDD => reg.put(l.rdd.id, h)
-        case _ => ()
-      }
-    } catch { case _: Throwable => () }
-    out
-  }
+  def local(df: DataFrame): DataFrame = df.localCheckpoint(false)
 
   /** Chained form: `frame.select(...).ckptLocal`. */
   implicit class CkptOps(private val df: DataFrame) extends AnyVal {
     def ckptLocal: DataFrame = Ckpt.local(df)
   }
-
-  /** Newline-prefixed, sorted lineage hashes for every REGISTERED
-    * checkpoint leaf in `plan`; empty when none. Appended to the
-    * normalized plan text by [[Bench.normalizedPlanText]].
-    */
-  private[graft] def lineageTag(plan: LogicalPlan): String = {
-    val hs = plan.collectLeaves().flatMap {
-      case l: LogicalRDD => Option(reg.get(l.rdd.id))
-      case _ => None
-    }
-    if (hs.isEmpty) "" else hs.sorted.mkString("\nckpt-lineage:", ",", "")
-  }
-
-  /** Content hash of a checkpoint child: its normalized plan text plus
-    * the lineage tags of checkpoints nested inside it (registered
-    * earlier by construction order), so the hash chains transitively.
-    */
-  private def lineageHash(plan: LogicalPlan): String =
-    Bench.hash6(Bench.normalizeText(plan.toString) + lineageTag(plan))
 }

@@ -12,9 +12,7 @@ package graft
   *
   * arg0 = output directory, arg1 = filename suffix, rest = keys
   * (empty rest = all keys). Formatted mode is the PHYSICAL plan with
-  * operator details (PushedFilters, ReadSchema, join build side) —
-  * complementary to [[FpDump]], which dumps the normalized OPTIMIZED
-  * LOGICAL text the merge fingerprint hashes.
+  * operator details (PushedFilters, ReadSchema, join build side).
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {

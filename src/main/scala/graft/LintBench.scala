@@ -16,8 +16,7 @@ package graft
   *   - drift: a key whose last TWO rounds' readings both sit more
   *     than 0.3 s above its older cross-round minimum fails — one
   *     high reading is ambient load, two consecutive is a regression
-  *     (quiet-run spread on this box is ±0.2 s; the retry passes in
-  *     [[Bench]] already arbitrate single-round spikes).
+  *     (quiet-run spread on this box is ±0.2 s).
   *
   * Run it after the closing `runMain graft.Bench`; the verify skill
   * carries it as the round-close step. No SparkSession — a plain file
@@ -126,8 +125,9 @@ object LintBench {
 
   private val pair = """"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
 
-  /** Same minimal scrape as Bench.crossRoundMins: every "name":number
-    * pair in the file; summary numerics are excluded via the shared
+  /** Minimal scrape: every "name":number pair in the file (the
+    * `"build"` id is a string and never matches); summary numerics are
+    * excluded via the shared
     * [[Bench.summaryNumericFields]] constant (the summary line is
     * embedded in the detail artifact).
     */

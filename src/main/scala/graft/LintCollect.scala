@@ -101,9 +101,10 @@ object LintCollect {
   }
 
   def main(args: Array[String]): Unit = {
-    val root = Seq("/root/repo/src/main/scala", "src/main/scala")
-      .map(new java.io.File(_)).find(_.isDirectory)
-      .getOrElse(sys.error("src/main/scala not found"))
+    // The working directory's tree: sbt forks `run` in the project
+    // base dir, so this is the checkout the lint was launched from.
+    val root = new java.io.File("src/main/scala")
+    if (!root.isDirectory) sys.error("src/main/scala not found")
     val scan = lintTree(root)
     if (scan.failures.nonEmpty) {
       scan.failures.foreach(m => System.err.println(s"LINT_COLLECT FAIL: $m"))

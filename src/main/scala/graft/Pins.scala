@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
+import scala.util.control.NonFatal
+
 /** Bounded persist slots for PER-INVOCATION pinned frames (r8).
   *
   * The problem with a bare `df.persist()` inside a query builder: the
@@ -38,7 +40,7 @@ object Pins {
     val prev = slots.put(slot, df)
     if (prev != null && (prev ne df)) {
       try prev.unpersist(blocking = false)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     df.persist()
   }
@@ -60,7 +62,7 @@ object Pins {
       val df = slots.remove(k)
       if (df != null) {
         try df.unpersist(blocking = false)
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
     }
   }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rounds above older-min + 0.3 s", with negative controls for a
   * single spike and for a key too new to have a baseline.
   */
-class LintBenchSpec extends AnyFunSuite with SparkSpec {
+class LintBenchSpec extends AnyFunSuite {
 
   private def plant(dir: java.nio.file.Path, round: Int,
       entries: (String, Double)*): java.io.File = {
@@ -107,157 +107,44 @@ class LintBenchSpec extends AnyFunSuite with SparkSpec {
     assert(LintBench.lintFresh(Seq.empty, Set("a")).nonEmpty)
   }
 
-  test("min-merge: a prior reading survives only under a matching plan " +
-    "fingerprint (r15 verdict #3 — stale-prior invalidation)") {
-    // Prior file: both keys timed fast, fingerprints committed.
-    val priorTxt =
-      """{"queries":{"a":0.40,"b":0.50,"c":0.30},""" +
-        """"plans":{"a":"aaaa11","b":"bbbb22","c":"cccc33"},""" +
-        """"summary":{"metric":"total","value":1.2}}"""
-    // This run: a unchanged (same fingerprint) but slower — prior min
-    // survives; b re-implemented mid-round (fingerprint changed) —
-    // prior reading is evidence for dead code and must be dropped;
-    // c errored this run — the -1 sentinel always wins the merge.
-    val current = Seq("a" -> 0.55, "b" -> 0.80, "c" -> -1.0)
-    val plans = Map("a" -> "aaaa11", "b" -> "ffff99", "c" -> "cccc33")
-    val merged = Bench.mergeDetail(current, plans, priorTxt,
-      Set("a", "b", "c")).toMap
-    assert(merged("a") == 0.40, "matching fingerprint: min-merge applies")
-    assert(merged("b") == 0.80, "changed fingerprint: prior invalidated")
-    assert(merged("c") == -1.0, "current error sentinel always wins")
+  private def prior(build: Option[String]) =
+    """{"queries":{"a":0.40,"b":0.50,"c":0.30,"zombie":0.10},""" +
+      build.map(b => s""""build":"$b",""").getOrElse("") +
+      """"summary":{"metric":"total","value":1.3}}"""
+  // a and b ran slower this run, c errored; zombie is no longer
+  // declared, so this run never timed it.
+  private val current = Seq("a" -> 0.55, "b" -> 0.45, "c" -> -1.0)
+
+  test("min-merge: only a same-build prior merges") {
+    val same = Bench.mergeDetail(current, "ab12", prior(Some("ab12"))).toMap
+    assert(same == Map("a" -> 0.40, "b" -> 0.45, "c" -> -1.0),
+      "same build: per-key min; the error sentinel wins; zombie dropped")
+    assert(Bench.mergeDetail(current, "ab12", prior(Some("cd34"))) == current,
+      "a different build merges nothing")
   }
 
-  test("cross-round seed (r17 verdict #1): the previous round's reading " +
-    "survives only under a matching fingerprint; a changed plan rejects " +
-    "the carry and the error sentinel still always wins") {
-    // Same-round prior: both keys re-ran this round already.
-    val sameRound =
-      """{"queries":{"a":0.50,"b":0.45},""" +
-        """"plans":{"a":"aaaa11","b":"bbbb22"},""" +
-        """"summary":{"metric":"total","value":0.95}}"""
-    // Previous round's board: quieter readings for all three keys —
-    // but b's plan changed between rounds (its r-1 fingerprint is for
-    // code that no longer exists) and c errors THIS run.
-    val prevRound =
-      """{"queries":{"a":0.40,"b":0.30,"c":0.20},""" +
-        """"plans":{"a":"aaaa11","b":"ffff99","c":"cccc33"},""" +
-        """"summary":{"metric":"total","value":0.90}}"""
-    val current = Seq("a" -> 0.55, "b" -> 0.60, "c" -> -1.0)
-    val plans = Map("a" -> "aaaa11", "b" -> "bbbb22", "c" -> "cccc33")
-    val merged = Bench.seedFromPriors(current, plans,
-      Seq(sameRound, prevRound), Set("a", "b", "c")).toMap
-    assert(merged("a") == 0.40,
-      "unchanged fingerprint: the prior round's quiet minimum seeds the board")
-    assert(merged("b") == 0.45,
-      "changed fingerprint: the cross-round carry is rejected but the " +
-        "matching same-round prior still min-merges")
-    assert(merged("c") == -1.0, "current error sentinel always wins")
+  test("min-merge: a prior file with no build id merges nothing") {
+    for (p <- Seq(prior(None), ""))
+      assert(Bench.mergeDetail(current, "ab12", p) == current,
+        s"a prior that cannot name its build merges nothing: $p")
+    assert(Bench.mergeDetail(current, "", prior(Some(""))) == current,
+      "an empty build id (no src/main) merges nothing")
   }
 
-  test("min-merge: an old-format prior file (no plans section) cannot " +
-    "prove what it measured — all prior readings are dropped") {
-    val priorTxt = """{"queries":{"a":0.40},""" +
-      """"summary":{"metric":"total","value":0.4}}"""
-    val merged = Bench.mergeDetail(Seq("a" -> 0.55),
-      Map("a" -> "aaaa11"), priorTxt, Set("a")).toMap
-    assert(merged("a") == 0.55)
-  }
-
-  test("plan fingerprints are stable across plan rebuilds for the same " +
-    "code and differ across plans") {
-    import spark.implicits._
-    def build() = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
-      .filter(org.apache.spark.sql.functions.col("id") > 0)
-      .groupBy("v").count()
-    val a1 = Bench.planFingerprint(build())
-    val a2 = Bench.planFingerprint(build()) // rebuild → fresh exprIds
-    assert(a1 == a2, "exprId churn must not change the fingerprint")
-    val other = Bench.planFingerprint(
-      Seq((1L, "x")).toDF("id", "v").groupBy("id").count())
-    assert(other != a1, "a different plan must fingerprint differently")
-  }
-
-  test("checkpoint lineage (r19): a code change HIDDEN behind a " +
-    "localCheckpoint leaf still flips the fingerprint; identical " +
-    "rebuilds stay stable") {
-    // The r19 blind spot made real: corpus_curate's candidate-stage
-    // restructure sat entirely behind the pairs checkpoint, its
-    // fingerprint did not move, and the board carried the old code's
-    // minimum. Ckpt.local registers the child plan's lineage hash so
-    // the fingerprint sees through the LogicalRDD leaf.
-    // A real parquet scan, NOT a LocalRelation: the optimizer folds a
-    // filtered LocalRelation to bare schema text, which would hide the
-    // threshold from the child hash and vacuously pass this test.
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    def build(thresh: Int) = {
-      val base = T.lineitem(spark, sf)
-        .select(col("l_orderkey").as("a"))
-        .filter(col("a") > thresh) // the CHECKPOINTED subtree
-      Ckpt.local(base).groupBy("a").count()
+  test("build id: same bytes, same id; any edit changes it") {
+    def tree(comment: String) = {
+      val d = fresh()
+      val f = d.resolve("src/main/scala/graft/A.scala")
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.writeString(f, s"package graft\n// $comment\n")
+      java.nio.file.Files.writeString(d.resolve("build.sbt"), "name := \"x\"\n")
+      d.toFile
     }
-    val f1 = Bench.planFingerprint(build(0))
-    val f2 = Bench.planFingerprint(build(0)) // rebuild: fresh RDD ids
-    assert(f1 == f2, "identical checkpointed pipelines must fingerprint " +
-      "identically across rebuilds")
-    val f3 = Bench.planFingerprint(build(1)) // change INSIDE the ckpt
-    assert(f3 != f1, "a change hidden behind the checkpoint leaf must " +
-      "flip the fingerprint")
-    // Control: a bare (unregistered) localCheckpoint keeps the pre-r19
-    // behavior — no tag, no error.
-    val bare = Seq((1L, 2L)).toDF("a", "b").localCheckpoint(false)
-      .groupBy("b").count()
-    assert(Bench.planFingerprint(bare).nonEmpty)
-  }
-
-  test("fingerprints are core-count independent: an env-derived " +
-    "repartition width must not split fingerprints across environments") {
-    // r16 verdict #1: the builder's and the driver's JVMs run
-    // different local[N]; T.spread-style repartition(defaultParallelism)
-    // put that N into the plan text and 20 keys' committed quiet minima
-    // were discarded by the driver's loaded re-run. The normalizer now
-    // masks partition WIDTHS (the plan SHAPE still fingerprints).
-    import spark.implicits._
-    def build(n: Int) = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
-      .repartition(n)
-      .filter(org.apache.spark.sql.functions.col("id") > 0)
-    assert(Bench.planFingerprint(build(8)) == Bench.planFingerprint(build(32)),
-      "8-core and 32-core spreads must fingerprint identically")
-    val noSpread = Seq((1L, "x")).toDF("id", "v")
-      .filter(org.apache.spark.sql.functions.col("id") > 0)
-    assert(Bench.planFingerprint(build(8)) != Bench.planFingerprint(noSpread),
-      "masking the width must not erase the Repartition node itself")
-    // The width-SENSITIVE secondary hash (r17 advice #1) sees exactly
-    // what the merge fingerprint masks: a width change — so a
-    // same-environment FpDump diff across code versions can name a
-    // deliberate repartition-count change.
-    assert(Bench.widthFingerprint(build(8)) != Bench.widthFingerprint(build(32)),
-      "the width hash must expose a repartition-width change")
-    assert(Bench.widthFingerprint(build(8)) == Bench.widthFingerprint(build(8)),
-      "same width, same code: the width hash is stable")
-  }
-
-  test("plan-text shape lint flags env-variant residue classes") {
-    assert(Bench.planTextShapeViolations("Filter (id#x > 0)").isEmpty)
-    assert(Bench.planTextShapeViolations("Repartition 32, true").nonEmpty,
-      "unmasked core count must be flagged")
-    assert(Bench.planTextShapeViolations(
-      "Exchange RoundRobinPartitioning(8), REPARTITION_BY_NUM").nonEmpty)
-    assert(Bench.planTextShapeViolations(
-      "Exchange hashpartitioning(k#x, 32)").nonEmpty,
-      "a cached shuffle fragment's partition count must be flagged " +
-        "so it gets normalized, not silently split fingerprints")
-    assert(Bench.planTextShapeViolations(
-      "Location: InMemoryFileIndex[file:/tmp/graft_stage_x]").nonEmpty,
-      "tmpdir scratch paths are env-variant")
-    assert(Bench.planTextShapeViolations(
-      "Location: InMemoryFileIndex[file:/root/testdata/sf0.1/x.parquet]")
-      .isEmpty, "input fixture paths are the contract, allowed")
-    assert(Bench.planTextShapeViolations(
-      "genesis-cube(/tmp/graft_cube_12411_mini.csv)").isEmpty,
-      "the cube DataSource's deterministic staged fixtures are allowed")
-    assert(Bench.planTextShapeViolations("Filter (id#1 > 0)").nonEmpty,
-      "raw exprIds mean the text was never normalized")
+    val id = Bench.buildId(tree("one"))
+    assert(id.matches("[0-9a-f]{64}"), id)
+    assert(Bench.buildId(tree("one")) == id, "same bytes in another dir")
+    assert(Bench.buildId(tree("two")) != id, "one edited comment")
+    assert(Bench.buildId(fresh().toFile) == "", "no src/main: empty id")
   }
 
   test("an accepted-floor re-pin clears an adjudicated regression; " +

@@ -56,7 +56,7 @@ class LintCollectSpec extends AnyFunSuite {
   }
 
   test("the current main tree is green AND the scan actually visited it") {
-    val root = new java.io.File("/root/repo/src/main/scala")
+    val root = new java.io.File("src/main/scala")
     val scan = LintCollect.lintTree(root)
     assert(scan.failures.isEmpty, scan.failures.mkString("\n"))
     // r16 advice #3: the old green was vacuous — a charset bug made

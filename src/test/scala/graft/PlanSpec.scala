@@ -778,24 +778,4 @@ class PlanSpec extends SparkSpec {
     }
     assert(bad.isEmpty, bad.mkString("\n"))
   }
-
-  test("engine-wide sweep: no env-variant residue in ANY key's " +
-    "normalized plan text (fingerprint cross-environment contract)") {
-    // r16 verdict #1: fingerprints were only cross-JVM stable, not
-    // cross-ENVIRONMENT — the core count leaked into plan text via
-    // defaultParallelism spreads (`Repartition N` / cached
-    // `RoundRobinPartitioning(N)`), so the driver's differently-sized
-    // JVM invalidated 20 keys' committed minima. The shape lint makes
-    // the contract mechanical: after normalization, NO key's text may
-    // carry a token class that varies per JVM, per core count, or per
-    // tmpdir. A new plan shape that smuggles one in fails here, not
-    // two rounds later in a poisoned bench merge.
-    val bad = scala.collection.mutable.ListBuffer[String]()
-    for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-      val txt = Bench.normalizedPlanText(fn(spark, sf))
-      Bench.planTextShapeViolations(txt).foreach(v => bad += s"$name: $v")
-      graft.Pins.clearAll()
-    }
-    assert(bad.isEmpty, bad.mkString("\n"))
-  }
 }
