@@ -1,8 +1,37 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.util.control.NonFatal
 
+/** Benchmark main (`runMain graft.Bench [keys…]`), and the one home of
+  * what the harness mains share: env defaults, key selection and the
+  * round-file reader. With no keys it sweeps all of them and writes the
+  * round files; named keys are timed under the same policy and print
+  * the same two lines, but write no round file, so a subset run can
+  * never shrink the board.
+  */
 object Bench {
+
+  /** Scale-factor directory the harness mains read. */
+  private[graft] def sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Local cores (and shuffle partitions) the harness mains run on. */
+  private[graft] def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  type Q = (SparkSession, String) => DataFrame
+
+  /** Keys of `SparkEntry.queries` in sorted order: all of them when
+    * `names` is empty, otherwise exactly the named ones. Fails naming
+    * every unknown name, so a typo never silently runs nothing.
+    */
+  private[graft] def selectKeys(names: Seq[String]): Seq[(String, Q)] = {
+    val all = SparkEntry.queries
+    val unknown = names.filterNot(all.contains).distinct
+    require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(", ")}")
+    (if (names.isEmpty) all.toSeq else names.distinct.map(k => k -> all(k)))
+      .sortBy(_._1)
+  }
 
   /** Round files in the working directory matching `pattern`. Every
     * bench artifact is read and written relative to where the bench
@@ -13,17 +42,15 @@ object Bench {
     Option(new java.io.File(".").listFiles()).toSeq.flatten
       .filter(_.getName.matches(pattern))
 
-  /** Numeric fields of the summary JSON line that are NOT query names.
-    * [[LintBench]] excludes exactly this set when diffing a
-    * BENCH_DETAIL file's scraped keys against `SparkEntry.queries`
-    * (the summary is embedded in the same file); [[main]] asserts at
-    * write time that the summary it just built introduces no numeric
-    * key outside this set, so adding a summary field without updating
-    * the constant fails the BENCH, not the later lint (r12 advice:
-    * the two copies of this list had already drifted apart once).
+  private val roundSuffix = """_r(\d+)\.json$""".r
+
+  /** Round number of a round file (`BENCH_r07.json`,
+    * `BENCH_DETAIL_r8.json`, `CORRECTNESS_r18.json`, ...); 0 when the
+    * name carries none.
     */
-  val summaryNumericFields: Set[String] =
-    Set("value", "nqueries", "timed", "loadavg_before", "loadavg_after")
+  private[graft] def roundOf(f: java.io.File): Int =
+    roundSuffix.findFirstMatchIn(f.getName)
+      .flatMap(_.group(1).toIntOption).getOrElse(0)
 
   /** Identity of the code a sweep measured: SHA-256 over the sorted
     * relative paths and bytes of every file under `root/src/main`, plus
@@ -54,10 +81,11 @@ object Bench {
     md.digest().map(b => f"$b%02x").mkString
   }
 
-  private val timePair = """"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
+  private val timePair = """"([A-Za-z0-9_]+)":\s*(-?[0-9]+(?:\.[0-9]+)?)""".r
 
   /** Per-key times of a BENCH_DETAIL / BENCH_FRESH file: the numeric
-    * pairs before the embedded summary.
+    * pairs before the embedded summary. Whitespace after the colon is
+    * allowed (the r8 board was written as `"key": 0.195`).
     */
   private[graft] def queryTimes(txt: String): Map[String, Double] =
     timePair.findAllMatchIn(txt.split("\"summary\"").head)
@@ -95,10 +123,8 @@ object Bench {
     * round overwrites its own detail file rather than advancing).
     */
   private def currentRound(): Int = {
-    def rounds(pat: String, pre: String) = benchFiles(pat).flatMap(
-      _.getName.stripPrefix(pre).stripSuffix(".json").toIntOption)
-    val committed = rounds("BENCH_r\\d+\\.json", "BENCH_r")
-    val detail = rounds("BENCH_DETAIL_r\\d+\\.json", "BENCH_DETAIL_r")
+    val committed = benchFiles("BENCH_r\\d+\\.json").map(roundOf)
+    val detail = benchFiles("BENCH_DETAIL_r\\d+\\.json").map(roundOf)
     math.max(committed.maxOption.getOrElse(0) + 1,
       detail.maxOption.getOrElse(1))
   }
@@ -115,14 +141,15 @@ object Bench {
     System.err.println(s"bench: $what failed: $e")
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val keys = selectKeys(args.toSeq)
+    val sweep = args.isEmpty
     // Taken before anything runs: the id describes the tree the sweep
     // was launched from, even if a file is edited mid-sweep.
     val build =
-      try buildId(new java.io.File("."))
+      if (!sweep) ""
+      else try buildId(new java.io.File("."))
       catch { case NonFatal(e) => warn("build id of src/main", e); "" }
-    val spark = GraftSession.local(cpus.toInt)
+    val spark = GraftSession.local(cpus)
     val loadBefore = loadavg()
     // Full materialization via the noop sink, NOT count(): under
     // Aggregate(count(1)) the optimizer prunes every unused projection
@@ -137,18 +164,16 @@ object Bench {
     // earlier key (or the warm-up pass) taxes every subsequent plan
     // compilation via the CacheManager canonicalization walk — each
     // key's timing must be its own cost, fresh-session honest.
-    def run(fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Unit =
+    def run(fn: Q): Unit =
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       finally Pins.clearAll()
     // Untimed warm-up pass: JVM/codegen/session init otherwise lands on
     // whichever query happens to run first (~10 s of noise in round 1).
-    SparkEntry.queries.foreach { case (_, fn) =>
+    keys.foreach { case (_, fn) =>
       try run(fn) catch { case _: Throwable => () }
     }
     var errors = List.empty[String]
-    def once(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
+    def once(name: String, fn: Q): Double = {
       val t0 = System.nanoTime()
       try run(fn) catch {
         case _: Throwable =>
@@ -166,7 +191,7 @@ object Bench {
     // masquerading as a 1.7 s query's time (measured on this box).
     // `retried` lists the keys that got that third run.
     var retried = List.empty[String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = keys.map { case (name, fn) =>
       val two = Seq(once(name, fn), once(name, fn)).filter(_ >= 0)
       val best =
         if (two.isEmpty) -1.0
@@ -203,16 +228,9 @@ object Bench {
     // reading the JSON alone can tell a complete 130-key sweep from one
     // where 30 keys errored out, without parsing prose.
     val summary = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nqueries":${results.size},"timed":${results.count(_._2 >= 0)},"errors":$errs,"retried":$retr,"loadavg_before":${fmt(loadBefore)},"loadavg_after":${fmt(loadavg())},"sf":"$sfDir"}"""
-    // Keep the summary's numeric keys inside the shared constant (see
-    // [[summaryNumericFields]]) — a drifted field would otherwise make
-    // LintBench flag it as a stale query key at round close.
-    val summaryNumeric = timePair.findAllMatchIn(summary).map(_.group(1)).toSet
-    require(summaryNumeric.subsetOf(summaryNumericFields),
-      s"summary numeric fields drifted from Bench.summaryNumericFields: " +
-        (summaryNumeric -- summaryNumericFields).mkString(","))
     println(summary)
-    // Two artifacts in the working directory, both carrying the build
-    // id they measured:
+    // A sweep writes two artifacts in the working directory, both
+    // carrying the build id they measured (a subset run writes none):
     //   - BENCH_FRESH_r{N}.json: THIS run's readings verbatim,
     //     overwritten whole on every run — the round measurement;
     //   - BENCH_DETAIL_r{N}.json: the round board. A re-run of the SAME
@@ -220,23 +238,25 @@ object Bench {
     //     code is the one remedy for load noise); a run of any other
     //     build replaces it, so the board only ever holds readings of
     //     the code it names.
-    val round = currentRound()
-    // Files.writeString, not PrintWriter: a PrintWriter swallows write
-    // errors, and a failed write must name itself on stderr.
-    def write(path: String, times: Seq[(String, Double)]): Unit =
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-        s"""{"queries":${timesJson(times)},"build":"$build","summary":$summary}""" + "\n")
-      catch { case NonFatal(e) => warn(s"write of $path", e) }
-    val detail = s"BENCH_DETAIL_r$round.json"
-    val prior =
-      try {
-        val f = new java.io.File(detail)
-        if (!f.exists()) ""
-        else java.nio.file.Files.readString(f.toPath,
-          java.nio.charset.StandardCharsets.UTF_8)
-      } catch { case NonFatal(e) => warn(s"read of $detail", e); "" }
-    write(detail, mergeDetail(results, build, prior))
-    write(s"BENCH_FRESH_r$round.json", results)
+    if (sweep) {
+      val round = currentRound()
+      // Files.writeString, not PrintWriter: a PrintWriter swallows write
+      // errors, and a failed write must name itself on stderr.
+      def write(path: String, times: Seq[(String, Double)]): Unit =
+        try java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+          s"""{"queries":${timesJson(times)},"build":"$build","summary":$summary}""" + "\n")
+        catch { case NonFatal(e) => warn(s"write of $path", e) }
+      val detail = s"BENCH_DETAIL_r$round.json"
+      val prior =
+        try {
+          val f = new java.io.File(detail)
+          if (!f.exists()) ""
+          else java.nio.file.Files.readString(f.toPath,
+            java.nio.charset.StandardCharsets.UTF_8)
+        } catch { case NonFatal(e) => warn(s"read of $detail", e); "" }
+      write(detail, mergeDetail(results, build, prior))
+      write(s"BENCH_FRESH_r$round.json", results)
+    }
     spark.stop()
   }
 }

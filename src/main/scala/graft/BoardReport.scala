@@ -16,10 +16,8 @@ package graft
 object BoardReport {
 
   /** Newest file matching `pattern`, by embedded round number. */
-  private def newest(pattern: String, prefix: String): Option[java.io.File] =
-    Bench.benchFiles(pattern).sortBy(f =>
-      f.getName.stripPrefix(prefix).stripSuffix(".json")
-        .toIntOption.getOrElse(0)).lastOption
+  private def newest(pattern: String): Option[java.io.File] =
+    Bench.benchFiles(pattern).sortBy(Bench.roundOf).lastOption
 
   /** CORRECTNESS_r*.json → key → short status. The driver writes one
     * object per key: hash/rows/schema booleans (null when no oracle)
@@ -44,8 +42,8 @@ object BoardReport {
 
   def report(): String = {
     val declared = SparkEntry.queries.keySet
-    val corrFile = newest("CORRECTNESS_r\\d+\\.json", "CORRECTNESS_r")
-    val benchFile = newest("BENCH_DETAIL_r\\d+\\.json", "BENCH_DETAIL_r")
+    val corrFile = newest("CORRECTNESS_r\\d+\\.json")
+    val benchFile = newest("BENCH_DETAIL_r\\d+\\.json")
     def read(f: Option[java.io.File]): String = f.map { x =>
       try scala.io.Source.fromFile(x).mkString catch { case _: Throwable => "" }
     }.getOrElse("")

@@ -16,20 +16,15 @@ package graft
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     require(args.length >= 2, "usage: ExplainDump <outDir> <suffix> [keys…]")
+    val keys = Bench.selectKeys(args.drop(2).toSeq)
     val outDir = new java.io.File(args(0))
     outDir.mkdirs()
     val suffix = args(1)
-    val keys =
-      if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq
-    val unknown = keys.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown keys: $unknown")
-    val spark = GraftSession.local(cpus)
-    keys.sorted.foreach { name =>
+    val spark = GraftSession.local(Bench.cpus)
+    keys.foreach { case (name, fn) =>
       val txt =
-        try SparkEntry.queries(name)(spark, sfDir)
+        try fn(spark, Bench.sfDir)
           .queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
         catch { case e: Throwable => s"ERR:$e" }

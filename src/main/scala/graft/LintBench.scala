@@ -20,8 +20,8 @@ package graft
   *
   * Run it after the closing `runMain graft.Bench`; the verify skill
   * carries it as the round-close step. No SparkSession — a plain file
-  * scan, so it runs in milliseconds. Core is [[lint]] so LintBenchSpec
-  * can drive it over planted fixture files.
+  * scan through [[Bench.queryTimes]], so it runs in milliseconds. Core
+  * is [[lint]] so LintBenchSpec can drive it over planted fixture files.
   */
 object LintBench {
 
@@ -48,11 +48,12 @@ object LintBench {
     // 1.165 vs older cross-round min 1.125), ts_anomaly (1.2 → 1.082
     // vs 1.027), graph_components (1.3 → 1.171 vs 0.974), knn_recall
     // (1.05 → 0.792 vs 0.622), knn_pq_recall (1.45 → 1.082 vs 0.997).
-    // Each r18 board reading sits UNDER its older cross-round minimum
-    // + the 0.3 drift slack, and the r19+ boards inherit the r18
-    // minima on fingerprint match, so the re-armed tripwire cannot
-    // fire on today's plans — it re-arms at the true level exactly as
-    // the contract intends.
+    // Each r18 board reading sat UNDER its older cross-round minimum
+    // + the 0.3 drift slack, so the re-armed tripwire could not fire
+    // on the r18 plans — it re-armed at the true level exactly as the
+    // contract intends. Later boards do NOT inherit the r18 minima:
+    // since the board became a same-build min-merge, each round's
+    // board holds only readings of the build it names.
     // The r16→r17 d-k/s-band adjudication (r16 verdict #2): five keys'
     // r15 floors proved unreproducible on a quiet box two rounds
     // running. Evidence, r17 TimeKeys min-of-5 at sf0.1 bracketed by
@@ -123,24 +124,18 @@ object LintBench {
     "text_perplexity" -> 1.0
   )
 
-  private val pair = """"([A-Za-z0-9_]+)":(-?[0-9]+(?:\.[0-9]+)?)""".r
+  private def times(f: java.io.File): Map[String, Double] =
+    Bench.queryTimes(java.nio.file.Files.readString(f.toPath))
 
-  /** Minimal scrape: every "name":number pair in the file (the
-    * `"build"` id is a string and never matches); summary numerics are
-    * excluded via the shared
-    * [[Bench.summaryNumericFields]] constant (the summary line is
-    * embedded in the detail artifact).
+  /** Coverage of one round file's readings against the declared keys:
+    * missing, errored (−1) and stale keys, in that order.
     */
-  private def scrape(f: java.io.File): Map[String, Double] = {
-    val txt = scala.io.Source.fromFile(f).mkString
-    pair.findAllMatchIn(txt)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      .filterNot { case (k, _) => Bench.summaryNumericFields(k) }
-  }
-
-  private def roundOf(f: java.io.File): Int =
-    f.getName.stripPrefix("BENCH_DETAIL_r").stripSuffix(".json")
-      .toIntOption.getOrElse(0)
+  private def coverage(swept: Map[String, Double],
+      declared: Set[String]): Seq[String] = Seq(
+    "missing" -> (declared -- swept.keySet).toSeq,
+    "errored" -> declared.toSeq.filter(k => swept.get(k).exists(_ < 0)),
+    "stale" -> (swept.keySet -- declared).toSeq
+  ).collect { case (what, ks) if ks.nonEmpty => s"$what=${ks.sorted.mkString(",")}" }
 
   /** All failure messages for `details` (BENCH_DETAIL files, any
     * order) against the `declared` key set; empty = clean.
@@ -149,11 +144,8 @@ object LintBench {
       accepted: Map[String, Double] = acceptedFloors): Seq[String] = {
     if (details.isEmpty)
       return Seq("no BENCH_DETAIL_r*.json found")
-    val byRound = details.map(f => roundOf(f) -> scrape(f)).sortBy(_._1)
+    val byRound = details.map(f => Bench.roundOf(f) -> times(f)).sortBy(_._1)
     val (newestRound, swept) = byRound.last
-    val missing = (declared -- swept.keySet).toSeq.sorted
-    val errored = declared.toSeq.filter(k => swept.get(k).exists(_ < 0)).sorted
-    val stale = (swept.keySet -- declared).toSeq.sorted
     val over = declared.toSeq
       .filter(k => swept.get(k).exists(v => v > budgetSec)).sorted
     // Drift: reading > (older min + slack) in BOTH of the two newest
@@ -175,15 +167,12 @@ object LintBench {
         else None
       }
     }
-    Seq(
-      if (missing.nonEmpty) Seq(s"missing=${missing.mkString(",")}") else Nil,
-      if (errored.nonEmpty) Seq(s"errored=${errored.mkString(",")}") else Nil,
-      if (stale.nonEmpty) Seq(s"stale=${stale.mkString(",")}") else Nil,
+    (coverage(swept, declared) ++ Seq(
       if (over.nonEmpty)
         Seq(s"over-budget(>${budgetSec}s)=${over.map(k => f"$k=${swept(k)}%.2f").mkString(",")}")
       else Nil,
       if (drift.nonEmpty) Seq(s"drift: ${drift.mkString("; ")}") else Nil
-    ).flatten.map(m => s"[r$newestRound] $m")
+    ).flatten).map(m => s"[r$newestRound] $m")
   }
 
   /** Coverage check for the FRESH-run artifact (r18 verdict #1): the
@@ -198,19 +187,9 @@ object LintBench {
       declared: Set[String]): Seq[String] = {
     if (freshes.isEmpty)
       return Seq("no BENCH_FRESH_r*.json found (run graft.Bench)")
-    def roundOfFresh(f: java.io.File): Int =
-      f.getName.stripPrefix("BENCH_FRESH_r").stripSuffix(".json")
-        .toIntOption.getOrElse(0)
-    val newest = freshes.maxBy(roundOfFresh)
-    val swept = scrape(newest)
-    val missing = (declared -- swept.keySet).toSeq.sorted
-    val errored = declared.toSeq.filter(k => swept.get(k).exists(_ < 0)).sorted
-    val stale = (swept.keySet -- declared).toSeq.sorted
-    Seq(
-      if (missing.nonEmpty) Seq(s"fresh missing=${missing.mkString(",")}") else Nil,
-      if (errored.nonEmpty) Seq(s"fresh errored=${errored.mkString(",")}") else Nil,
-      if (stale.nonEmpty) Seq(s"fresh stale=${stale.mkString(",")}") else Nil
-    ).flatten.map(m => s"[fresh r${roundOfFresh(newest)}] $m")
+    val newest = freshes.maxBy(Bench.roundOf)
+    coverage(times(newest), declared)
+      .map(m => s"[fresh r${Bench.roundOf(newest)}] fresh $m")
   }
 
   def main(args: Array[String]): Unit = {

@@ -7,11 +7,8 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // Extra args = run only those keys (local iteration); the driver
     // passes exactly two, so it always dumps the full map.
-    val only = args.drop(2).toSet
-    val keys = if (only.isEmpty) SparkEntry.queries
-               else SparkEntry.queries.filter(k => only(k._1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.local(cpus.toInt)
+    val keys = Bench.selectKeys(args.drop(2).toSeq)
+    val spark = GraftSession.local(Bench.cpus)
     new java.io.File(outDir).mkdirs()
     keys.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

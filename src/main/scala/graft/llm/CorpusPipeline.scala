@@ -58,10 +58,6 @@ object CorpusPipeline {
     // list in the SAME job — three formerly-sequential
     // materialization jobs collapsed into one. At cluster scale the
     // same role is persist(DISK_ONLY) or a staging write.
-    val dbg = sys.props.contains("graft.cc.debug")
-    def mark(label: String, t0: Long): Unit = if (dbg)
-      println(f"CURATE $label ${(System.nanoTime() - t0) / 1e9}%.3fs")
-    val tEx = System.nanoTime()
     // NOT coalesced before the checkpoint (r15, measured): narrowing
     // the slice to 8 partitions here reads as pure scheduling savings,
     // but the checkpoint materializes inside the component loop's
@@ -76,16 +72,11 @@ object CorpusPipeline {
       .filter(col("rn") === 1)
       .drop("rn", "digest")
       .ckptLocal
-    mark("exact-ckpt-plan", tEx)
     // 3. near-dup drop: verified pairs → connected components → keep
     //    each component's smallest id (exact, chain-bias-free)
-    val tMh = System.nanoTime()
     val pairs = LlmDedup.minhashPairs(exact, nearDupJaccard, maxBandDf)
-    mark("minhash-build", tMh)
-    val tCc = System.nanoTime()
     val reps = LlmDedup.connectedComponents(exact, pairs)
       .filter(col("doc_id") === col("cluster")).select("doc_id")
-    mark("components", tCc)
     // reps is component-representative-sized (≤ docs, typically ≪) —
     // broadcast it so the keep-join never exchanges the kept slice.
     val kept = exact.join(broadcast(reps), Seq("doc_id"))

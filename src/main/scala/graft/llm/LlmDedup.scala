@@ -335,10 +335,7 @@ object LlmDedup {
     // halves of this fix landed). Lazy: the narrow (d1, d2, j) rows
     // materialize inside the loop's round-0 probe job, which also
     // stops the union re-EXECUTING the verify joins per direction.
-    val tP = System.nanoTime()
     val p = pairs.ckptLocal
-    if (sys.props.contains("graft.cc.debug")) println(
-      f"CC pairs-ckpt-plan ${(System.nanoTime() - tP) / 1e9}%.3fs")
     val edges = p.select(col("d1").as("src"), col("d2").as("dst"))
       .unionByName(p.select(col("d2").as("src"), col("d1").as("dst")))
     val labels = LlmGraph.components(edges, maxRounds)

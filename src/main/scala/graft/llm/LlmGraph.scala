@@ -194,12 +194,8 @@ object LlmGraph {
       maxRounds: Int = 25): (DataFrame, Int) = {
     require(edges.columns.toSeq == Seq("src", "dst"),
       s"edges must be exactly (src, dst), got: ${edges.columns.mkString(",")}")
-    val dbg = sys.props.contains("graft.cc.debug")
-    val tE = System.nanoTime()
     val e = edges.ckptLocal
-    if (dbg) println(
-      f"CC edges-ckpt-plan ${(System.nanoTime() - tE) / 1e9}%.3fs")
-    if (dbg) {
+    if (sys.props.contains("graft.cc.debug")) {
       // Debug-mode mirrored-edges assertion (see Scaladoc): a dst-only
       // node id would seed a label the jump join can't resolve. One
       // anti-join over the checkpointed edge frame — debug-only cost.
@@ -310,16 +306,10 @@ object LlmGraph {
       // pure driver planning). The lazy checkpoint defers everything
       // to the probe job — one planning pass per round — and still
       // truncates lineage so plan DEPTH stays constant.
-      val tCk = System.nanoTime()
       val next = stepped.ckptLocal
-      if (sys.props.contains("graft.cc.debug")) println(
-        f"CC round=$rounds ckpt-plan ${(System.nanoTime() - tCk) / 1e9}%.3fs")
       // The convergence probe is the round's one scheduled job; it
       // materializes the checkpoint as a side effect.
-      val t0 = System.nanoTime()
       val changed = next.filter(col("comp") =!= col("prev")).count()
-      if (sys.props.contains("graft.cc.debug"))
-        println(f"CC round=$rounds changed=$changed probe=${(System.nanoTime() - t0) / 1e9}%.3fs")
       converged = changed == 0
       labels = next.select("node", "comp")
       // What localCheckpoint does NOT truncate is the SIZE ESTIMATE:
@@ -396,8 +386,6 @@ object LlmGraph {
       restore("spark.sql.adaptive.enabled", aqeBefore)
       restore("spark.sql.shuffle.partitions", shpBefore)
     }
-    if (sys.props.contains("graft.cc.debug"))
-      println(s"CC rounds=$rounds")
     (labels, rounds)
   }
 

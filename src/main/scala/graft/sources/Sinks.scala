@@ -110,7 +110,9 @@ object Sinks {
     * In-place rewrite requires breaking lineage first — Spark refuses
     * to overwrite a path its own plan reads from — so the partition is
     * materialized via eager `localCheckpoint` before the dynamic
-    * overwrite replaces just that directory.
+    * overwrite replaces just that directory. Dynamic mode is a writer
+    * option, not a session conf: other queries in the session keep
+    * their own overwrite mode.
     */
   def compactPartition(spark: org.apache.spark.sql.SparkSession,
       path: String, partCol: String, partValue: String,
@@ -118,12 +120,10 @@ object Sinks {
     val part = spark.read.parquet(path)
       .filter(org.apache.spark.sql.functions.col(partCol) === partValue)
       .localCheckpoint(true)
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.get(key, "STATIC")
-    spark.conf.set(key, "dynamic")
-    try part.repartition(targetFiles)
-      .write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(path)
-    finally spark.conf.set(key, prev)
+    part.repartition(targetFiles)
+      .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(path)
   }
 
   /** Latest-revision-wins storage refresh (the reference's re-download
@@ -131,18 +131,14 @@ object Sinks {
     * the partitions present in `df`, leave every other partition
     * untouched. Dynamic partition-overwrite does this natively — no
     * read-modify-write of the whole table, so a 100 TB store refreshes
-    * one cube's directory in O(new data).
+    * one cube's directory in O(new data). The mode is set on this
+    * writer only; the session conf is left alone.
     */
   def replacePartitions(df: DataFrame, path: String,
-      partCols: Seq[String]): Unit = {
-    val conf = df.sparkSession.conf
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = conf.get(key, "STATIC")
-    conf.set(key, "dynamic")
-    try df.repartition(partCols.map(df.col): _*)
+      partCols: Seq[String]): Unit =
+    df.repartition(partCols.map(df.col): _*)
       .write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCols: _*)
       .parquet(path)
-    finally conf.set(key, prev)
-  }
 }

@@ -12,9 +12,8 @@ import graft.operators.SubqueryOps
 class ExecCountSpec extends SparkSpec {
 
   /** Stages submitted + parquet input bytes read for one execution.
-    * The listener bus is async (no public waitUntilEmpty): poll until
-    * both counters are stable across TWO consecutive samples (r15 — a
-    * slow bus on a loaded box could look momentarily stable after one).
+    * The listener bus is async: every event the execution posted is
+    * delivered by draining the bus before the counters are read.
     */
   private def measure(run: () => Unit): (Int, Long) =
     measure3(run) match { case (s, b, _) => (s, b) }
@@ -47,12 +46,7 @@ class ExecCountSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       run()
-      var prev = (-1, -1L, -1); var stable = 0; var waited = 0
-      while (stable < 2 && waited < 20000) {
-        val cur = (stages, records, fsStages)
-        if (cur == prev) stable += 1 else stable = 0
-        prev = cur; Thread.sleep(300); waited += 300
-      }
+      org.apache.spark.SpecListenerBus.drain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
     (stages, records, fsStages)
   }

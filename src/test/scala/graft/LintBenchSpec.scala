@@ -12,16 +12,24 @@ import org.scalatest.funsuite.AnyFunSuite
 class LintBenchSpec extends AnyFunSuite {
 
   private def plant(dir: java.nio.file.Path, round: Int,
-      entries: (String, Double)*): java.io.File = {
+      entries: (String, Double)*): java.io.File =
+    plantAs("DETAIL", dir, round, entries)
+
+  private def plantFresh(dir: java.nio.file.Path, round: Int,
+      entries: (String, Double)*): java.io.File =
+    plantAs("FRESH", dir, round, entries)
+
+  private def plantAs(kind: String, dir: java.nio.file.Path, round: Int,
+      entries: Seq[(String, Double)]): java.io.File = {
     val qs = entries.map { case (k, v) => s""""$k":$v""" }
       .mkString("{", ",", "}")
     // Summary embedded exactly the way Bench.main writes it — the lint
-    // must exclude its numeric fields via Bench.summaryNumericFields.
+    // reads only the pairs before it (Bench.queryTimes).
     val summary = s"""{"metric":"total","value":9.9,"unit":"sec",""" +
       s""""nqueries":${entries.size},"timed":${entries.size},""" +
       s""""errors":[],"retried":[],"loadavg_before":0.5,""" +
       s""""loadavg_after":0.6,"sf":"x"}"""
-    val f = dir.resolve(s"BENCH_DETAIL_r$round.json").toFile
+    val f = dir.resolve(s"BENCH_${kind}_r$round.json").toFile
     val w = new java.io.PrintWriter(f)
     try w.println(s"""{"queries":$qs,"summary":$summary}""") finally w.close()
     f
@@ -70,22 +78,40 @@ class LintBenchSpec extends AnyFunSuite {
       msgs.mkString("\n"))
   }
 
-  test("no detail file at all fails") {
-    assert(LintBench.lint(Seq.empty, Set("a")).nonEmpty)
+  test("drift: an r8-style history file written with \": \" spacing " +
+    "counts as a round") {
+    val d = fresh()
+    // The r8 board was written by a JSON dumper: `"key": 0.195`, a
+    // space after every colon, and its summary carries extra fields.
+    val r8 = d.resolve("BENCH_DETAIL_r8.json")
+    java.nio.file.Files.writeString(r8,
+      """{"queries": {"a": 1.0, "b": -1.0}, "summary": {"metric": """ +
+        """"total", "value": 74.179, "unit": "sec", "nqueries": 2, """ +
+        """"errors": ["b"], "note": "merged"}, "note": "merged"}""" + "\n")
+    assert(Bench.queryTimes(java.nio.file.Files.readString(r8)) ==
+      Map("a" -> 1.0, "b" -> -1.0))
+    // a's only baseline is the r8 reading: 1.0 → 1.4 → 1.45 drifts.
+    val files = Seq(r8.toFile,
+      plant(d, 9, "a" -> 1.4, "b" -> 0.5),
+      plant(d, 10, "a" -> 1.45, "b" -> 0.5))
+    val msgs = LintBench.lint(files, Set("a", "b"))
+    assert(msgs.size == 1 && msgs.head.startsWith("[r10] drift: a: r9=1.40,r10=1.45"),
+      msgs.mkString("\n"))
   }
 
-  private def plantFresh(dir: java.nio.file.Path, round: Int,
-      entries: (String, Double)*): java.io.File = {
-    val qs = entries.map { case (k, v) => s""""$k":$v""" }
-      .mkString("{", ",", "}")
-    val summary = s"""{"metric":"total","value":9.9,"unit":"sec",""" +
-      s""""nqueries":${entries.size},"timed":${entries.size},""" +
-      s""""errors":[],"retried":[],"loadavg_before":0.5,""" +
-      s""""loadavg_after":0.6,"sf":"x"}"""
-    val f = dir.resolve(s"BENCH_FRESH_r$round.json").toFile
-    val w = new java.io.PrintWriter(f)
-    try w.println(s"""{"queries":$qs,"summary":$summary}""") finally w.close()
-    f
+  test("key selection: all keys sorted when none is named, else exactly " +
+    "the named ones; unknown names fail by name") {
+    val all = SparkEntry.queries.keySet
+    assert(Bench.selectKeys(Nil).map(_._1) == all.toSeq.sorted)
+    assert(Bench.selectKeys(Seq("scan_parquet", "agg_cube", "agg_cube"))
+      .map(_._1) == Seq("agg_cube", "scan_parquet"))
+    val e = intercept[IllegalArgumentException](
+      Bench.selectKeys(Seq("agg_cube", "no_such_key", "nor_this")))
+    assert(e.getMessage.contains("no_such_key, nor_this"), e.getMessage)
+  }
+
+  test("no detail file at all fails") {
+    assert(LintBench.lint(Seq.empty, Set("a")).nonEmpty)
   }
 
   test("fresh artifact (r18 verdict #1): newest file gates coverage — " +

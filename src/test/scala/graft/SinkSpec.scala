@@ -9,6 +9,15 @@ import java.nio.file.Files
   */
 class SinkSpec extends SparkSpec {
 
+  /** `write` from the default overwrite mode leaves every session conf
+    * as it found it: dynamic mode stays on the writer. */
+  private def assertConfUnchanged(write: => Unit): Unit = {
+    spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    val before = spark.conf.getAll
+    write
+    assert(spark.conf.getAll == before)
+  }
+
   test("partitioned write prunes directories on read-back filter") {
     val out = Files.createTempDirectory("sink").resolve("docs").toString
     val docs = T.documents(spark, sf)
@@ -68,7 +77,7 @@ class SinkSpec extends SparkSpec {
     // Re-download of cube B only: its partition is replaced wholesale,
     // cube A must be byte-untouched.
     val v2 = Seq(("B", 9L, "new")).toDF("cube", "id", "rev")
-    Sinks.replacePartitions(v2, out, Seq("cube"))
+    assertConfUnchanged(Sinks.replacePartitions(v2, out, Seq("cube")))
     val back = spark.read.parquet(out)
       .select("cube", "id", "rev").orderBy("cube", "id")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
@@ -86,7 +95,8 @@ class SinkSpec extends SparkSpec {
     assert(files().length >= 5)
     val before = spark.read.parquet(out).select("id")
       .collect().map(_.getLong(0)).sorted.toSeq
-    Sinks.compactPartition(spark, out, "p", "hot", targetFiles = 2)
+    assertConfUnchanged(
+      Sinks.compactPartition(spark, out, "p", "hot", targetFiles = 2))
     assert(files().length == 2, s"expected 2 files, got ${files().length}")
     val after = spark.read.parquet(out).select("id")
       .collect().map(_.getLong(0)).sorted.toSeq
