@@ -167,8 +167,14 @@ object Bench {
     def run(fn: Q): Unit =
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       finally Pins.clearAll()
-    // Untimed warm-up pass: JVM/codegen/session init otherwise lands on
+    // Untimed warm-up pass: JVM/session init otherwise lands on
     // whichever query happens to run first (~10 s of noise in round 1).
+    // It also compiles every key's generated classes, and the timed
+    // runs reuse them: GraftSession sizes the codegen cache to hold a
+    // whole sweep (at Spark's 100 entries a second pass compiled about
+    // as many classes as the first). A few keys still compile a class
+    // or two per run: AQE numbers their whole-stage classes in the
+    // order concurrent stages finish, so the class name varies.
     keys.foreach { case (_, fn) =>
       try run(fn) catch { case _: Throwable => () }
     }

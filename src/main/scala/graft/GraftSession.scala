@@ -17,8 +17,38 @@ import org.apache.spark.sql.SparkSession
   *     real cluster).
   *   - AQE is left ON (Spark 4 default): runtime coalescing, skew-join
   *     splitting (evidence in ScaleSpec), dynamic join re-planning.
+  *   - the generated-code cache holds `codegenCacheEntries` classes,
+  *     not 100 (see there).
   */
 object GraftSession {
+
+  /** Size of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100).
+    *
+    * Why 100 thrashes: the engine runs the same plans again and again
+    * (every bench pass, every refresh-then-lookup cycle), and each
+    * pass revisits far more than 100 distinct classes, in a cycle.
+    * Guava splits the cache into 4 segments that each evict LRU on
+    * their own, so a cyclic sweep larger than a segment misses on
+    * almost every lookup and recompiles (janino) the class it evicted
+    * a moment ago. Measured in one session, two same-order passes over
+    * all 244 keys: at sf0.1 with an unbounded cache, pass 1 compiled
+    * 2,438 distinct classes and pass 2 compiled 44; at sf0.01 pass 1
+    * compiled 2,419 distinct classes, and pass 2 compiled 3,301 again
+    * at the default size against 28 at this size. The size is the
+    * smallest power of two at least 1.5× the sf0.1 count.
+    *
+    * Memory: the cache keeps its classes loaded. At sf0.01 Metaspace
+    * after pass 2 was 219 MB at this size against 201 MB at the
+    * default, whose evicted classes get unloaded.
+    *
+    * The cache is JVM-global and is sized once, by the session conf in
+    * force when Spark's `CodeGenerator` is first used in the JVM. Every
+    * session built here gets this size; an application that embeds
+    * the engine and compiles code before it builds a GraftSession
+    * keeps Spark's default.
+    */
+  private val codegenCacheEntries: Int = 4096
 
   /** Preconfigured builder; callers may adjust before `getOrCreate`. */
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -55,6 +85,7 @@ object GraftSession {
       // grouped-posting shapes.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (1 << 20).toString)
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
 
   /** Build-and-quiet: the form the mains use. */

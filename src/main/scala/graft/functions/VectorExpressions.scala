@@ -67,76 +67,39 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 object VectorExpressions {
-  private val ident = FunctionIdentifier("graft_dot")
-  private val mhIdent = FunctionIdentifier("graft_minhash")
-  private val shIdent = FunctionIdentifier("graft_shingles")
-  private val nfcIdent = FunctionIdentifier("graft_nfc")
-  private val bpeIdent = FunctionIdentifier("graft_bpe")
-  private val mh48Ident = FunctionIdentifier("graft_minhash48")
-  private val s128Ident = FunctionIdentifier("graft_sum128")
-  private val pairsIdent = FunctionIdentifier("graft_pairs")
-  private val vgIdent = FunctionIdentifier("graft_variant_gets")
-  private val jvIdent = FunctionIdentifier("graft_json_valid")
-  private val cngIdent = FunctionIdentifier("graft_char_ngrams")
-  private val apIdent = FunctionIdentifier("graft_adjacent_pairs")
 
-  /** Register once per session; safe to call repeatedly. */
+  /** Register once per session; safe to call repeatedly. The query
+    * builders call this on every invocation, so a name the session's
+    * registry already holds is skipped: re-registering would replace
+    * the entry and log a `replaced a previously registered function`
+    * warning per function per call. The check is per session, so a
+    * `newSession()` (its own registry) still gets every function.
+    */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      ident,
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children.head, children(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      mhIdent,
-      new ExpressionInfo(classOf[MinhashSig].getName, "graft_minhash"),
-      (children: Seq[Expression]) => MinhashSig(children.head,
-        intLiteral("graft_minhash", children(1))))
-    spark.sessionState.functionRegistry.registerFunction(
-      shIdent,
-      new ExpressionInfo(classOf[Shingles].getName, "graft_shingles"),
-      (children: Seq[Expression]) => Shingles(children.head,
-        intLiteral("graft_shingles", children(1))))
-    spark.sessionState.functionRegistry.registerFunction(
-      nfcIdent,
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => NfcNormalize(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      bpeIdent,
-      new ExpressionInfo(classOf[BpeEncode].getName, "graft_bpe"),
-      (children: Seq[Expression]) => BpeEncode(children.head,
-        stringArrayLiteral("graft_bpe", children(1))))
-    spark.sessionState.functionRegistry.registerFunction(
-      mh48Ident,
-      new ExpressionInfo(classOf[Minhash48].getName, "graft_minhash48"),
-      (children: Seq[Expression]) => Minhash48(children.head,
-        intLiteral("graft_minhash48", children(1))))
-    spark.sessionState.functionRegistry.registerFunction(
-      s128Ident,
-      new ExpressionInfo(classOf[Sum128].getName, "graft_sum128"),
-      (children: Seq[Expression]) => Sum128(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      pairsIdent,
-      new ExpressionInfo(classOf[PairsOf].getName, "graft_pairs"),
-      (children: Seq[Expression]) => PairsOf(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      vgIdent,
-      new ExpressionInfo(classOf[VariantGets].getName, "graft_variant_gets"),
-      (children: Seq[Expression]) => VariantGets(children.head,
-        children.tail.map(c => VariantGets.parseSpec(
-          stringLiteral("graft_variant_gets", c)))))
-    spark.sessionState.functionRegistry.registerFunction(
-      jvIdent,
-      new ExpressionInfo(classOf[JsonValid].getName, "graft_json_valid"),
-      (children: Seq[Expression]) => JsonValid(children.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      cngIdent,
-      new ExpressionInfo(classOf[CharNgrams].getName, "graft_char_ngrams"),
-      (children: Seq[Expression]) => CharNgrams(children.head,
-        intLiteral("graft_char_ngrams", children(1))))
-    spark.sessionState.functionRegistry.registerFunction(
-      apIdent,
-      new ExpressionInfo(classOf[AdjacentPairs].getName, "graft_adjacent_pairs"),
-      (children: Seq[Expression]) => AdjacentPairs(children.head))
+    val registry = spark.sessionState.functionRegistry
+    def once(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Unit = {
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id))
+        registry.registerFunction(id, new ExpressionInfo(cls.getName, name), build)
+    }
+    once("graft_dot", classOf[DotProduct])(c => DotProduct(c.head, c(1)))
+    once("graft_minhash", classOf[MinhashSig])(c => MinhashSig(c.head,
+      intLiteral("graft_minhash", c(1))))
+    once("graft_shingles", classOf[Shingles])(c => Shingles(c.head,
+      intLiteral("graft_shingles", c(1))))
+    once("graft_nfc", classOf[NfcNormalize])(c => NfcNormalize(c.head))
+    once("graft_bpe", classOf[BpeEncode])(c => BpeEncode(c.head,
+      stringArrayLiteral("graft_bpe", c(1))))
+    once("graft_minhash48", classOf[Minhash48])(c => Minhash48(c.head,
+      intLiteral("graft_minhash48", c(1))))
+    once("graft_sum128", classOf[Sum128])(c => Sum128(c.head))
+    once("graft_pairs", classOf[PairsOf])(c => PairsOf(c.head))
+    once("graft_variant_gets", classOf[VariantGets])(c => VariantGets(c.head,
+      c.tail.map(a => VariantGets.parseSpec(stringLiteral("graft_variant_gets", a)))))
+    once("graft_json_valid", classOf[JsonValid])(c => JsonValid(c.head))
+    once("graft_char_ngrams", classOf[CharNgrams])(c => CharNgrams(c.head,
+      intLiteral("graft_char_ngrams", c(1))))
+    once("graft_adjacent_pairs", classOf[AdjacentPairs])(c => AdjacentPairs(c.head))
   }
 
   /** Second arguments of the custom functions must be integral literals

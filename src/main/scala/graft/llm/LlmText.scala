@@ -110,9 +110,10 @@ object LlmText {
     // bigram probability uses bigram mass Nb, both exact.
     "text_collocations" -> ((s, d) => {
       graft.functions.VectorExpressions.register(s)
-      val docs = T.spread(T.documents(s, d))
-        .select(split(col("text"), " ").as("ts"))
-        .ckptLocal // feeds totals, unigrams, and bigrams
+      // Eager: totals, unigrams and bigrams run as concurrent stages
+      // over this frame (see Ckpt.eager).
+      val docs = graft.Ckpt.eager(T.spread(T.documents(s, d))
+        .select(split(col("text"), " ").as("ts")))
       val tot = docs.agg(
         sum(size(col("ts"))).cast("long").as("nt"),
         sum(greatest(size(col("ts")) - 1, lit(0))).cast("long").as("nb"))

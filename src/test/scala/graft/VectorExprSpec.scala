@@ -1,6 +1,11 @@
 package graft
 
 import graft.functions.VectorExpressions
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** Native DotProduct expression: bit-identical to the higher-order
@@ -24,6 +29,38 @@ class VectorExprSpec extends SparkSpec {
       .filter(col("a") =!= col("b")) // exact double comparison
       .count()
     assert(diff == 0)
+  }
+
+  test("register again keeps the registered function and logs no replacement") {
+    VectorExpressions.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    val id = FunctionIdentifier("graft_dot")
+    val info = registry.lookupFunction(id).get
+    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val spy = new AbstractAppender("register-spy", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("replaced a previously registered function")) replaced.add(m)
+      }
+    }
+    spy.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(spy)
+    try VectorExpressions.register(spark)
+    finally { root.removeAppender(spy); spy.stop() }
+    assert(registry.lookupFunction(id).exists(_ eq info))
+    assert(replaced.isEmpty, replaced)
+  }
+
+  test("a fresh session still resolves graft_dot") {
+    VectorExpressions.register(spark)
+    val fresh = spark.newSession()
+    assert(!fresh.sessionState.functionRegistry.functionExists(FunctionIdentifier("graft_dot")))
+    val got = fresh.range(1)
+      .select(VectorExpressions.dotProduct(fresh,
+        array(lit(1f), lit(2f)), array(lit(3f), lit(4f))))
+      .collect()(0).getDouble(0)
+    assert(got == 1.0 * 3 + 2.0 * 4)
   }
 
   test("null elements contribute zero") {
