@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.VectorExpressions
 import org.apache.spark.sql.SparkSession
 
 /** The library's session entry point: one place that encodes every
@@ -11,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   *     pinned UTC (SURVEY.md §7.5).
   *   - `nanosAsLong` — Spark 4 rejects TIMESTAMP(NANOS) parquet
   *     outright without it; [[T.events]] then converts to µs.
+  *   - the native `graft_…` functions, injected as session extensions
+  *     ([[VectorExpressions.inject]]): query builders and SQL text
+  *     name them without registering them. A session built any other
+  *     way fails analysis with `UNRESOLVED_ROUTINE` naming the function.
   * Scale defaults (overridable after build):
   *   - shuffle partitions sized to the core count, not the 200 default
   *     (right for local/small-cluster; raise to ~2-3× total cores on a
@@ -54,6 +59,7 @@ object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
+      .withExtensions(VectorExpressions.inject)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       // maxPartitionBytes stays at the 128 MB default DELIBERATELY
       // (r12, measured): shrinking it to 2 MB to "parallelize" the
@@ -86,6 +92,9 @@ object GraftSession {
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (1 << 20).toString)
       .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
+      // The cache keys on the generated body; AQE numbers stages in the
+      // order they are created, so the id would make one body two keys.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
 
   /** Build-and-quiet: the form the mains use. */

@@ -36,20 +36,18 @@ object T {
     * rather than assuming one:
     *   - parquet TIMESTAMP(NANOS): Spark 4's reader rejects it
     *     ([PARQUET_TYPE_ILLEGAL]) unless
-    *     `spark.sql.legacy.parquet.nanosAsLong=true` (set here
-    *     defensively), which surfaces epoch-nanos as LongType → convert
-    *     via integer `div` (double division loses precision above 2^53;
-    *     epoch-nanos ≈ 1.7e18).
+    *     `spark.sql.legacy.parquet.nanosAsLong=true` (set by
+    *     [[GraftSession.builder]]), which surfaces epoch-nanos as
+    *     LongType → convert via integer `div` (double division loses
+    *     precision above 2^53; epoch-nanos ≈ 1.7e18).
     *   - timestamp[us] → TIMESTAMP_NTZ: cast to session-zone TIMESTAMP.
     *     The session is pinned UTC engine-wide, so the naive wall-clock
     *     value is preserved bit-for-bit (same trick join_nearest uses
     *     for o_orderdate).
     *   - TIMESTAMP: pass through.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  def events(s: SparkSession, d: String): DataFrame =
     normalizeTs(t(s, d, "events"))
-  }
 
   /** Normalize a `ts` column of any fixture vintage to TIMESTAMP.
     * Exposed separately from [[events]] so streaming reads (which go
@@ -164,10 +162,7 @@ object T {
       .otherwise(v)
   }
 
-  /** [[graft.functions.Sum128]] over a scaled-long column. Callers
-    * must have run `graft.functions.VectorExpressions.register(s)`
-    * (idempotent) so `graft_sum128` resolves.
-    */
+  /** [[graft.functions.Sum128]] over a scaled-long column. */
   def s128(c: Column): Column = call_function("graft_sum128", c)
 
   /** Descale a scale-`k` integer sum exactly: DECIMAL division by

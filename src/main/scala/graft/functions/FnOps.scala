@@ -133,7 +133,6 @@ object FnOps {
     // DuckDB's JSON type replays json_extract/json_valid over the
     // same rows.
     "fn_variant" -> ((s, d) => {
-      VectorExpressions.register(s)
       s.sql(
         s"""SELECT event_id,
            |  vg.k_num, vg.k_str, vg.missing_num,

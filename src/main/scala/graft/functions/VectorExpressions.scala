@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for the embedding dot product.
@@ -68,38 +67,33 @@ case class DotProduct(left: Expression, right: Expression)
 
 object VectorExpressions {
 
-  /** Register once per session; safe to call repeatedly. The query
-    * builders call this on every invocation, so a name the session's
-    * registry already holds is skipped: re-registering would replace
-    * the entry and log a `replaced a previously registered function`
-    * warning per function per call. The check is per session, so a
-    * `newSession()` (its own registry) still gets every function.
+  /** Adds the engine's native functions to every session built with
+    * these extensions; [[graft.GraftSession.builder]] installs it, so
+    * query builders and SQL text can name a `graft_…` function without
+    * registering it first. A `newSession()` shares its parent's
+    * extensions.
     */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def once(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Unit = {
-      val id = FunctionIdentifier(name)
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, new ExpressionInfo(cls.getName, name), build)
-    }
-    once("graft_dot", classOf[DotProduct])(c => DotProduct(c.head, c(1)))
-    once("graft_minhash", classOf[MinhashSig])(c => MinhashSig(c.head,
+  def inject(ext: SparkSessionExtensions): Unit = {
+    def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression): Unit =
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    fn("graft_dot", classOf[DotProduct])(c => DotProduct(c.head, c(1)))
+    fn("graft_minhash", classOf[MinhashSig])(c => MinhashSig(c.head,
       intLiteral("graft_minhash", c(1))))
-    once("graft_shingles", classOf[Shingles])(c => Shingles(c.head,
+    fn("graft_shingles", classOf[Shingles])(c => Shingles(c.head,
       intLiteral("graft_shingles", c(1))))
-    once("graft_nfc", classOf[NfcNormalize])(c => NfcNormalize(c.head))
-    once("graft_bpe", classOf[BpeEncode])(c => BpeEncode(c.head,
+    fn("graft_nfc", classOf[NfcNormalize])(c => NfcNormalize(c.head))
+    fn("graft_bpe", classOf[BpeEncode])(c => BpeEncode(c.head,
       stringArrayLiteral("graft_bpe", c(1))))
-    once("graft_minhash48", classOf[Minhash48])(c => Minhash48(c.head,
+    fn("graft_minhash48", classOf[Minhash48])(c => Minhash48(c.head,
       intLiteral("graft_minhash48", c(1))))
-    once("graft_sum128", classOf[Sum128])(c => Sum128(c.head))
-    once("graft_pairs", classOf[PairsOf])(c => PairsOf(c.head))
-    once("graft_variant_gets", classOf[VariantGets])(c => VariantGets(c.head,
+    fn("graft_sum128", classOf[Sum128])(c => Sum128(c.head))
+    fn("graft_pairs", classOf[PairsOf])(c => PairsOf(c.head))
+    fn("graft_variant_gets", classOf[VariantGets])(c => VariantGets(c.head,
       c.tail.map(a => VariantGets.parseSpec(stringLiteral("graft_variant_gets", a)))))
-    once("graft_json_valid", classOf[JsonValid])(c => JsonValid(c.head))
-    once("graft_char_ngrams", classOf[CharNgrams])(c => CharNgrams(c.head,
+    fn("graft_json_valid", classOf[JsonValid])(c => JsonValid(c.head))
+    fn("graft_char_ngrams", classOf[CharNgrams])(c => CharNgrams(c.head,
       intLiteral("graft_char_ngrams", c(1))))
-    once("graft_adjacent_pairs", classOf[AdjacentPairs])(c => AdjacentPairs(c.head))
+    fn("graft_adjacent_pairs", classOf[AdjacentPairs])(c => AdjacentPairs(c.head))
   }
 
   /** Second arguments of the custom functions must be integral literals
@@ -136,11 +130,5 @@ object VectorExpressions {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Short, _) => v.toInt
     case other => throw new IllegalArgumentException(
       s"$fn expects an integer literal as its second argument, got: $other")
-  }
-
-  /** Column-API surface for the codegen'd dot product. */
-  def dotProduct(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("graft_dot", a, b)
   }
 }

@@ -105,7 +105,6 @@ object CorpusPipeline {
     */
   def decontaminate(docs: DataFrame, benchmark: DataFrame,
       minSharedShingles: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     def postings(df: DataFrame) = graft.T.spread(
         df.filter(size(split(col("text"), " ")) >= 3))
       .select(col("doc_id"),
@@ -133,7 +132,6 @@ object CorpusPipeline {
     */
   def contaminationReport(docs: DataFrame, benchmark: DataFrame,
       minSharedShingles: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     def postings(df: DataFrame) = graft.T.spread(
         df.filter(size(split(col("text"), " ")) >= 3))
       .select(col("doc_id"),

@@ -42,7 +42,6 @@ object LlmDedup {
     * note in [[ngramPairs]]; measured 2.6× on dedup_cluster).
     */
   private def shingled(docs: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     T.spread(docs.filter(size(split(col("text"), " ")) >= 3))
       .withColumn("shingles",
         call_function("graft_shingles", col("text"), lit(3)))
@@ -559,7 +558,6 @@ object LlmDedup {
     // candidate join — and the LSH s-curve is hash-family-independent
     // (the planted-recall property and the ≡-exact-pairwise
     // ScalaCheck property re-pin recall unchanged).
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     val sh = sets.select(col("doc_id"),
       call_function("graft_minhash48", col("shingles"), lit(numHashes)).as("mh"))
     // Band key = the band's row-minima joined to a string (the
@@ -617,7 +615,6 @@ object LlmDedup {
     */
   def portableBandPostings(docs: DataFrame,
       carry: Seq[String] = Nil): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     val numBands = numHashes / rowsPerBand
     // T.spread only when the plan is batch: the repartition fans the
     // single-file fixture scan out before the per-row md5+minima work
@@ -682,7 +679,6 @@ object LlmDedup {
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int,
       maxBandDf: Option[Int] = None): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     val fp = simhashFingerprints(docs)
     // 4 bands of 12 bits: near-identical fingerprints share ≥1 band.
     val banded = fp.select(col("doc_id"), col("simhash"),

@@ -678,7 +678,6 @@ object LlmGraph {
     */
   def assocRules(baskets: DataFrame, minPairSupport: Int): DataFrame = {
     require(minPairSupport >= 1, s"minPairSupport must be >= 1")
-    graft.functions.VectorExpressions.register(baskets.sparkSession)
     val b = baskets.select(col("items")).ckptLocal
     val nb = b.agg(count(lit(1)).as("n_baskets"))
     // Item supports feed BOTH sides of the pair join — checkpoint the
@@ -790,7 +789,6 @@ object LlmGraph {
     // [[graft.functions.PairsOf]] (r15 — driver round 12) — the previous interpreted
     // flatten(transform(…, slice(…))) lambda paid O(k²) suffix copies
     // per basket; output is identical pair-for-pair.
-    graft.functions.VectorExpressions.register(s)
     T.spread(T.lineitem(s, d)
       .groupBy(col("l_orderkey"))
       .agg(array_sort(collect_set(col("l_partkey"))).as("ps")))

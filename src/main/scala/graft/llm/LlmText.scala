@@ -48,7 +48,6 @@ object LlmText {
     * and the Generate's input expression is codegen-resident.
     */
   private def trigrams(docs: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     T.spread(docs).select(col("doc_id"), col("lang"),
       explode_outer(call_function("graft_char_ngrams", col("text"), lit(3)))
         .as("g"))
@@ -109,7 +108,6 @@ object LlmText {
     // rank or filter (§7.5). Unigram probabilities use token mass Nt,
     // bigram probability uses bigram mass Nb, both exact.
     "text_collocations" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       // Eager: totals, unigrams and bigrams run as concurrent stages
       // over this frame (see Ckpt.eager).
       val docs = graft.Ckpt.eager(T.spread(T.documents(s, d))
@@ -254,7 +252,6 @@ object LlmText {
     // the terminal sort. Docs under 3 tokens score NULL (no 3-grams),
     // flag false.
     "text_repetition" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       val toks = split(col("text"), " ")
       T.documents(s, d)
         .select(col("doc_id"),
@@ -333,7 +330,6 @@ object LlmText {
     // the composition path on real data — both engines append the
     // same bytes, so the oracle replays it.
     "text_normalize" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       // "Cafe" + combining acute (U+0301) + doubled spaces + NBSP-free
       // tail; NFC composes e+0301 → é, the regex collapses the runs.
       val planted = concat(col("text"), lit(" Café  NAÏVE\tx "))
@@ -363,7 +359,6 @@ object LlmText {
     // tables. Σ m·ln(p) is the one double accumulation — ~dozen terms
     // per doc, fenced by round (§7.5).
     "text_perplexity" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       val docs = T.documents(s, d)
       // Bigrams straight off the token ARRAY (zip of the shifted
       // slices) — NARROW per-row work, where a lead() window would
@@ -484,7 +479,6 @@ object LlmText {
     * the key feeds it (PropertySpec exercises chained merges).
     */
   def bpeEncode(docs: DataFrame, merges: Seq[String]): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     // T.spread: the single-file fixture scan is one input partition;
     // fan out before the per-row merge loop (the portableBandPostings
     // shape — a bucketed production table wouldn't need it).

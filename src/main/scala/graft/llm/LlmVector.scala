@@ -38,7 +38,6 @@ object LlmVector {
 
   /** Exact top-k cosine neighbors within same-`block` groups. */
   def knnBrute(emb: DataFrame, k: Int, block: String): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val withNorm = graft.T.spread(emb).withColumn("nrm", norm(col("embedding")))
     val l = withNorm.select(col(block).as("blk"), col("vec_id").as("v1"),
       col("embedding").as("e1"), col("nrm").as("n1"))
@@ -64,7 +63,6 @@ object LlmVector {
     * Returns (v1, v2, cos), both directions, ordered (v1, v2).
     */
   def knnRadius(emb: DataFrame, minCos: Double, block: String): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val withNorm = graft.T.spread(emb)
       .withColumn("nrm", norm(col("embedding")))
     val l = withNorm.select(col(block).as("blk"), col("vec_id").as("v1"),
@@ -87,7 +85,6 @@ object LlmVector {
 
   /** Approximate top-k: exact scoring restricted to shared-bucket pairs. */
   def knnLsh(emb: DataFrame, k: Int, nBits: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val coded = graft.T.spread(emb)
       .withColumn("bucket", signCode(col("embedding"), nBits))
       .withColumn("nrm", norm(col("embedding")))
@@ -173,7 +170,6 @@ object LlmVector {
     */
   def knnIvfProbe(emb: DataFrame, k: Int, nCells: Int, nprobe: Int,
       kmeansIters: Int = 2, fitFraction: Double = 1.0): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val e = prepared(emb)
     searchIvfProbe(e, kMeansOn(e, nCells, kmeansIters, fitFraction),
       k, nprobe)
@@ -310,7 +306,6 @@ object LlmVector {
     */
   def kMeansCentroids(emb: DataFrame, nCells: Int, nIters: Int,
       fitFraction: Double = 1.0): Seq[(Long, Seq[Float])] = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     kMeansOn(prepared(emb), nCells, nIters, fitFraction)
   }
 
@@ -361,7 +356,6 @@ object LlmVector {
     */
   def knnIvf(emb: DataFrame, k: Int, nCells: Int, kmeansIters: Int = 2,
       fitFraction: Double = 1.0): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     // one cached spread+norm frame feeds the Lloyd passes AND the
     // final assignment — without it each pass re-derives the scan.
     val e = prepared(emb)
@@ -411,7 +405,6 @@ object LlmVector {
     */
   private[graft] def pqCodebook(sub: DataFrame, nSub: Int,
       iters: Int, fitFraction: Double = 1.0): Seq[Seq[Float]] = {
-    graft.functions.VectorExpressions.register(sub.sparkSession)
     // 100 TB training posture (r16, [[kMeansOn]]'s recipe brought to
     // the PQ tier): codebook QUALITY needs a representative sample,
     // not the corpus — `fitFraction < 1` trains each sub-quantizer on
@@ -588,7 +581,6 @@ object LlmVector {
     * cosine verification at `threshold`.
     */
   def embedDupPairs(emb: DataFrame, threshold: Double): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
     val coded = graft.T.spread(emb)
       .withColumn("bucket", signCode(col("embedding"), 4))
       .withColumn("nrm", norm(col("embedding")))
@@ -633,12 +625,10 @@ object LlmVector {
     }
     // Keyed by the SESSION OBJECT itself (reference equality): the
     // cached frame is persisted in the session that built it, so a
-    // later session in the same JVM must rebuild (and re-register the
-    // native expressions) rather than touch a plan bound to a
-    // possibly-stopped session. Live entries are bounded by live
-    // sessions-per-JVM × datasets (few).
+    // later session in the same JVM must rebuild rather than touch a
+    // plan bound to a possibly-stopped session. Live entries are
+    // bounded by live sessions-per-JVM × datasets (few).
     ivfCache.computeIfAbsent((s, s"$d|$nCells|$iters"), _ => {
-      graft.functions.VectorExpressions.register(s)
       val e = prepared(T.embeddings(s, d))
       (e, kMeansOn(e, nCells, iters))
     })
@@ -736,7 +726,6 @@ object LlmVector {
     // Multimodal row: text + vector + metadata joined into one frame,
     // projecting typed stats from each modality.
     "multimodal_join" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       T.documents(s, d)
         .join(T.embeddings(s, d), col("doc_id") === col("vec_id"))
         .select(col("doc_id"), col("lang"), col("n_chars"),

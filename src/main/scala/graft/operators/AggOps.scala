@@ -28,7 +28,6 @@ object AggOps {
     // decimal form per row too. Same exact values (2dp fixture, spec-
     // pinned), whole stage now codegen-resident.
     "agg_group" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       val pc = T.scaledLong(col("l_extendedprice"), 2, "l_extendedprice")
       val d2 = T.scaledLong(col("l_discount"), 2, "l_discount", maxScaled = 100L)
       val q = col("l_quantity").cast("long")
@@ -227,7 +226,6 @@ object AggOps {
     // aggregate, so feed it |pri×st| grid rows, not the fact table;
     // the base-grid money sum rides the scaled-long fast path.
     "agg_gsets" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       val grid = T.orders(s, d)
         .groupBy("o_orderpriority", "o_orderstatus")
         .agg(count(lit(1)).as("cnt"),
@@ -475,7 +473,6 @@ object AggOps {
     // the sum÷count form on the SAME exact sums (descaled decimal →
     // double image, bit-identical to the previous decimal program).
     "macro_pricing" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       val pc = T.scaledLong(col("l_extendedprice"), 2, "l_extendedprice")
       val d2 = T.scaledLong(col("l_discount"), 2, "l_discount", maxScaled = 100L)
       val t2 = T.scaledLong(col("l_tax"), 2, "l_tax", maxScaled = 100L)
@@ -552,7 +549,6 @@ object AggOps {
     // row), so numerator and denominator both ride Sum128 limbs and
     // the per-row decimal multiply disappears.
     "agg_weighted" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       val pc = T.scaledLong(col("l_extendedprice"), 2, "l_extendedprice")
       val q = col("l_quantity").cast("long")
       T.lineitem(s, d)
@@ -619,7 +615,6 @@ object AggOps {
     // count guards restore SQL's empty-cohort NULL (sum128 of an
     // all-NULL cohort evaluates to 0, not NULL).
     "agg_ttest" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       val aSide = col("user_id") % 2 === 0
       val v2 = T.scaledLong(col("value"), 2, "value")
       val g = T.events(s, d).groupBy("event_type").agg(
@@ -799,7 +794,6 @@ object AggOps {
     // then shuffles one LONG instead of a decimal. Descale BEFORE the
     // double images so share's quotient is bit-identical to the
     // decimal program at any magnitude.
-    graft.functions.VectorExpressions.register(lineitem.sparkSession)
     val rev4 = T.scaledLong(col("l_extendedprice"), 2, "l_extendedprice") *
       (lit(100L) - T.scaledLong(col("l_discount"), 2, "l_discount",
         maxScaled = 100L))
@@ -876,7 +870,6 @@ object AggOps {
     require(cols.size >= 2 && cols.size <= 8,
       s"need 2..8 columns, got ${cols.size}")
     require(scale >= 0 && scale <= 6, s"scale must be in [0, 6]: $scale")
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val pairs = for {
       i <- cols.indices; j <- (i + 1) until cols.size
     } yield (cols(i), cols(j))
@@ -921,14 +914,12 @@ object AggOps {
     // (a decimal(38) buffer pays a BigDecimal round-trip per row —
     // see [[graft.functions.Sum128]]; products are < 2^62 by the
     // magnitude contract above).
-    def s128(c: org.apache.spark.sql.Column) =
-      call_function("graft_sum128", c)
     val sums =
       cols.flatMap { case (c, _) => Seq(
-        s128(col(s"x_$c")).as(s"s_$c"),
-        s128(col(s"x_$c") * col(s"x_$c")).as(s"ss_$c")) } ++
+        T.s128(col(s"x_$c")).as(s"s_$c"),
+        T.s128(col(s"x_$c") * col(s"x_$c")).as(s"ss_$c")) } ++
       pairs.map { case ((a, _), (b, _)) =>
-        s128(col(s"x_$a") * col(s"x_$b")).as(s"sp_${a}_$b") }
+        T.s128(col(s"x_$a") * col(s"x_$b")).as(s"sp_${a}_$b") }
     val m = scaled.groupBy("g").agg(count(lit(1)).as("n"), sums: _*)
     def corr(a: String, b: String) = {
       val n = col("n").cast("double")
@@ -977,7 +968,6 @@ object AggOps {
   def oneWayF(df: DataFrame, cats: Seq[String]): DataFrame = {
     require(cats.size >= 2 && cats.size <= 8,
       s"need 2..8 categories, got ${cats.size}")
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val v2 = T.scaledLong(col("value"), 2, "value")
     val moments = cats.zipWithIndex.flatMap { case (c, i) =>
       val in = col("cat") === lit(c)
@@ -1033,7 +1023,6 @@ object AggOps {
     * construction. O(n log n) in the sort, no driver state.
     */
   def giniIndex(df: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("g").orderBy(col("value"), col("tie"))
     // Scaled-long moments (r18 — corrMatrix's recipe): the rank-
@@ -1189,7 +1178,6 @@ object AggOps {
   def linregFit(df: DataFrame, yScale: Int = 2): DataFrame = {
     require(yScale >= 0 && 2 * yScale <= 6,
       s"linregFit: yScale must satisfy 0 <= 2*yScale <= 6, got $yScale")
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val xRaw = col("x").cast("long")
     val xl = when(abs(xRaw) >= lit(1L << 28),
       raise_error(lit("linregFit: |x| outside [0, 2^28)"))).otherwise(xRaw)

@@ -137,7 +137,6 @@ object BloomJoin {
     // and the result is exactly the plain join's — false positives are
     // shuffle waste, not wrong rows.
     "join_bloom" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       val sel = T.orders(s, d).filter(col("o_orderpriority") === "1-URGENT")
       val probe = reduceProbe(T.lineitem(s, d), "l_orderkey", sel,
         "o_orderkey")

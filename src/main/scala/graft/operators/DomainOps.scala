@@ -381,7 +381,6 @@ object DomainOps {
     // whose Expand multiplies the lineitem FACT stream. Kept as the
     // known alternative if this rollup ever sits on a fact table.
     "region_rollup" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       val c = T.customer(s, d); val n = T.nation(s, d); val r = T.region(s, d)
       c.join(n, col("c_nationkey") === col("n_nationkey"))
         .join(r, col("n_regionkey") === col("r_regionkey"))

@@ -19,7 +19,6 @@ object FilterOps {
     // cents · discount·100 at scale 4 through Sum128 limbs replaces
     // the per-row decimal product + wide decimal buffer.
     "filter_conj" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       T.lineitem(s, d)
         .filter(
           col("l_shipdate") >= lit("1998-01-01").cast("timestamp") &&

@@ -48,7 +48,6 @@ object JoinOps {
       // Revenue on the scaled-long fast path (r18 — AggOps.agg_group's
       // rationale): long cents math + Sum128 limbs instead of per-row
       // wide-decimal products and DECIMAL(28,4) buffers.
-      graft.functions.VectorExpressions.register(s)
       val rev4 = T.scaledLong(col("l_extendedprice"), 2, "l_extendedprice") *
         (lit(100L) - T.scaledLong(col("l_discount"), 2, "l_discount",
           maxScaled = 100L))
@@ -62,7 +61,6 @@ object JoinOps {
 
     // Sort-merge pinned for the big-big join: spill-safe at any scale.
     "join_smj" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       T.lineitem(s, d)
         .hint("merge")
         .join(T.orders(s, d), col("l_orderkey") === col("o_orderkey"))
@@ -266,7 +264,6 @@ object JoinOps {
     // audits). Salting relocates rows, no arithmetic crosses salt
     // groups → answer-invariant; the oracle is the plain join.
     "join_skew_salted" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       Skew.saltedJoin(T.lineitem(s, d), "l_suppkey",
           T.supplier(s, d).hint("shuffle_hash"), "s_suppkey", salt = 8)
         .groupBy("s_nationkey")
@@ -313,7 +310,6 @@ object JoinOps {
     // fact side shuffles once on orderkey; every dimension side stays
     // broadcast-sized.
     "join_star" -> ((s, d) => {
-      graft.functions.VectorExpressions.register(s)
       val li = T.lineitem(s, d); val o = T.orders(s, d)
       val c = T.customer(s, d); val su = T.supplier(s, d)
       val n = T.nation(s, d); val r = T.region(s, d)

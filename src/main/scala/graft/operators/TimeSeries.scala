@@ -179,7 +179,6 @@ object TimeSeries {
       // every downstream double image is the exact value the decimal
       // program produced. v2 < 2^31 guard keeps v2² inside the limb
       // contract.
-      graft.functions.VectorExpressions.register(s)
       val v4 = T.scaledLong(col("value"), 4, "value", maxScaled = 1L << 31)
       val hourly = T.events(s, d)
         .groupBy(col("event_type"),
@@ -578,7 +577,6 @@ object TimeSeries {
   def crossCorr(df: DataFrame, typeA: String, typeB: String,
       maxLag: Int): DataFrame = {
     require(maxLag >= 0 && maxLag <= 8, s"maxLag must be in [0, 8]: $maxLag")
-    graft.functions.VectorExpressions.register(df.sparkSession)
     // Per-bucket counts are longs; the Pearson moments ride Sum128
     // limbs over plain long products (r18 wave 3 — the corrMatrix
     // recipe at scale 0: integer moments need no descale, so each
@@ -760,7 +758,6 @@ object TimeSeries {
     // bit-identical. NULL lag heads: sum128 adds 0 where sum skipped
     // NULL — same sums; the n=0 empty-lag case still emits NULL acf
     // through the same nullif(0, 0) path on both forms.
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val x = T.scaledLong(col("value"), 4, "value", maxScaled = 1L << 31)
     val lagged = df
       .withColumn("x", x)

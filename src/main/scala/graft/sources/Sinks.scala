@@ -109,7 +109,7 @@ object Sinks {
     *
     * In-place rewrite requires breaking lineage first — Spark refuses
     * to overwrite a path its own plan reads from — so the partition is
-    * materialized via eager `localCheckpoint` before the dynamic
+    * materialized via [[graft.Ckpt.eager]] before the dynamic
     * overwrite replaces just that directory. Dynamic mode is a writer
     * option, not a session conf: other queries in the session keep
     * their own overwrite mode.
@@ -117,9 +117,8 @@ object Sinks {
   def compactPartition(spark: org.apache.spark.sql.SparkSession,
       path: String, partCol: String, partValue: String,
       targetFiles: Int): Unit = {
-    val part = spark.read.parquet(path)
-      .filter(org.apache.spark.sql.functions.col(partCol) === partValue)
-      .localCheckpoint(true)
+    val part = graft.Ckpt.eager(spark.read.parquet(path)
+      .filter(org.apache.spark.sql.functions.col(partCol) === partValue))
     part.repartition(targetFiles)
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")

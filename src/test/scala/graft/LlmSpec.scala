@@ -229,7 +229,6 @@ class LlmSpec extends SparkSpec {
     // (The key's kCand = 10 trades recall for shortlist size; this
     // pins the machinery, not the knob.)
     import graft.llm.LlmVector
-    graft.functions.VectorExpressions.register(spark)
     val emb = T.embeddings(spark, sf)
     val n = emb.count().toInt
     val e = T.spread(emb).withColumn("nrm",
@@ -253,7 +252,6 @@ class LlmSpec extends SparkSpec {
     // ε of the full-train recall on the same fixture (both runs are
     // fully deterministic, so this is a pinned number, not a flake).
     import graft.llm.LlmVector
-    graft.functions.VectorExpressions.register(spark)
     val emb = T.embeddings(spark, sf)
     val e = T.spread(emb).withColumn("nrm",
       sqrt(call_function("graft_dot", col("embedding"), col("embedding"))))
@@ -396,7 +394,6 @@ class LlmSpec extends SparkSpec {
     // key runs the real corpus; semantics asserted on the micro frame
     // through the same column pipeline
     val toks = split(col("text"), " ")
-    graft.functions.VectorExpressions.register(spark)
     val m = docs.select(col("doc_id"),
         (size(toks) - 2).cast("long").as("total3"),
         when(size(toks) >= 3,

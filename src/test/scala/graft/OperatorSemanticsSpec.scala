@@ -1300,7 +1300,6 @@ class OperatorSemanticsSpec extends SparkSpec {
     // field, missing path → NULL) plus the validity probe. The slice
     // keeps the expensive 4×-reparse side affordable — parity on a
     // uniform 20k-row sample over the same column is the contract.
-    graft.functions.VectorExpressions.register(spark)
     val mismatches = spark.sql(
       s"""SELECT count(*) AS n FROM (
          |  SELECT

@@ -1423,7 +1423,6 @@ class PropertySpec extends SparkSpec {
       val want = cents.sortBy(_._1).map(_._2)
       assert(got == want, s"books: got $got want $want")
       // encode against the trained book must pick the local argmin
-      graft.functions.VectorExpressions.register(spark)
       val codes = df.select(col("vec_id"),
           graft.llm.LlmVector.pqCode(col("sub"), got).as("c"))
         .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
@@ -2338,7 +2337,6 @@ class PropertySpec extends SparkSpec {
       near <- Gen.oneOf(true, false)
       k <- Gen.choose(0L, 1000000L)
     } yield (g, if (near) (1L << 61) + k else k))
-    graft.functions.VectorExpressions.register(spark)
     forAllSeeded(gen) { rows =>
       val got = rows.toDF("g", "x")
         .repartition(7) // force merge of several partial buffers
@@ -2370,7 +2368,6 @@ class PropertySpec extends SparkSpec {
       neg <- Gen.oneOf(true, false)
       k <- Gen.choose(0L, 1000000L)
     } yield (g, (if (near) (1L << 61) + k else k) * (if (neg) -1L else 1L)))
-    graft.functions.VectorExpressions.register(spark)
     forAllSeeded(gen) { rows =>
       val got = rows.toDF("g", "x")
         .repartition(7)

@@ -98,7 +98,6 @@ class ScaledMoneySpec extends SparkSpec {
 
   test("scaled-long aggregate program ≡ the decimal program on sf0.001") {
     // The agg_group/macro_pricing measure set, both ways, exact match.
-    graft.functions.VectorExpressions.register(spark)
     val li = T.lineitem(spark, sf)
     val pc = T.scaledLong(col("l_extendedprice"), 2, "p")
     val d2 = T.scaledLong(col("l_discount"), 2, "d", maxScaled = 100L)

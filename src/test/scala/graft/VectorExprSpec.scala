@@ -1,11 +1,5 @@
 package graft
 
-import graft.functions.VectorExpressions
-import org.apache.logging.log4j.LogManager
-import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.Property
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** Native DotProduct expression: bit-identical to the higher-order
@@ -24,47 +18,31 @@ class VectorExprSpec extends SparkSpec {
       .crossJoin(emb.select(col("vec_id").as("v2"), col("embedding").as("e2")))
       .filter(col("v1") < col("v2")).limit(500)
     val diff = paired
-      .withColumn("a", VectorExpressions.dotProduct(spark, col("e1"), col("e2")))
+      .withColumn("a", call_function("graft_dot", col("e1"), col("e2")))
       .withColumn("b", hoDot("e1", "e2"))
       .filter(col("a") =!= col("b")) // exact double comparison
       .count()
     assert(diff == 0)
   }
 
-  test("register again keeps the registered function and logs no replacement") {
-    VectorExpressions.register(spark)
-    val registry = spark.sessionState.functionRegistry
-    val id = FunctionIdentifier("graft_dot")
-    val info = registry.lookupFunction(id).get
-    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val spy = new AbstractAppender("register-spy", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = {
-        val m = e.getMessage.getFormattedMessage
-        if (m.contains("replaced a previously registered function")) replaced.add(m)
-      }
-    }
-    spy.start()
-    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
-    root.addAppender(spy)
-    try VectorExpressions.register(spark)
-    finally { root.removeAppender(spy); spy.stop() }
-    assert(registry.lookupFunction(id).exists(_ eq info))
-    assert(replaced.isEmpty, replaced)
-  }
-
-  test("a fresh session still resolves graft_dot") {
-    VectorExpressions.register(spark)
+  test("a new session has all 12 native functions before any query builder runs") {
     val fresh = spark.newSession()
-    assert(!fresh.sessionState.functionRegistry.functionExists(FunctionIdentifier("graft_dot")))
-    val got = fresh.range(1)
-      .select(VectorExpressions.dotProduct(fresh,
-        array(lit(1f), lit(2f)), array(lit(3f), lit(4f))))
+    val registered = fresh.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+    val natives = Seq("graft_dot", "graft_minhash", "graft_shingles", "graft_nfc",
+      "graft_bpe", "graft_minhash48", "graft_sum128", "graft_pairs",
+      "graft_variant_gets", "graft_json_valid", "graft_char_ngrams",
+      "graft_adjacent_pairs")
+    assert(natives.filterNot(registered).isEmpty)
+    val dot = fresh.range(1)
+      .select(call_function("graft_dot", array(lit(1f), lit(2f)), array(lit(3f), lit(4f))))
       .collect()(0).getDouble(0)
-    assert(got == 1.0 * 3 + 2.0 * 4)
+    assert(dot == 1.0 * 3 + 2.0 * 4)
+    val valid = fresh.sql("""SELECT graft_json_valid('{"a": 1}'), graft_json_valid('{"a":')""")
+      .collect()(0)
+    assert(valid.getBoolean(0) && !valid.getBoolean(1), valid)
   }
 
   test("null elements contribute zero") {
-    VectorExpressions.register(spark)
     val df = Seq((Seq[java.lang.Float](1f, null, 3f), Seq[java.lang.Float](2f, 5f, 4f)))
       .toDF("a", "b")
     val got = df.select(call_function("graft_dot", col("a"), col("b")))
@@ -73,7 +51,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("null array input yields null, and codegen path is exercised") {
-    VectorExpressions.register(spark)
     val df = Seq((Option.empty[Seq[Float]], Some(Seq(1f, 2f)))).toDF("a", "b")
     val row = df.select(call_function("graft_dot", col("a"), col("b"))).collect()(0)
     assert(row.isNullAt(0))
@@ -86,7 +63,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("graft_shingles: one-pass shingles equal the column-math form, stay codegen'd") {
-    VectorExpressions.register(spark)
     // equivalence oracle: the old interpreted formulation, element for
     // element (split semantics incl. repeated/trailing spaces, distinct
     // keeps FIRST occurrence, <3 tokens -> empty)
@@ -119,7 +95,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("graft_minhash: one-pass signature matches per-seed reference, stays codegen'd") {
-    VectorExpressions.register(spark)
     val docs = Seq(
       (1L, Seq("a b c", "b c d", "c d e")),
       (2L, Seq("a b c", "b c d", "c d e")),          // identical set
@@ -149,7 +124,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("graft_nfc: composes decomposed sequences, identity on normal text, codegen'd") {
-    VectorExpressions.register(spark)
     // e + U+0301 → é; I + U+0308 → Ï; ASCII unchanged; empty ok;
     // null passes through (UnaryExpression null-safe path)
     val df = Seq(
@@ -178,7 +152,6 @@ class VectorExprSpec extends SparkSpec {
     // empty, singleton, and a pair. Order must match the lambda's
     // (i < j lexicographic) exactly — consumers groupBy afterwards,
     // but the contract is the stronger one.
-    VectorExpressions.register(spark)
     val baskets = T.lineitem(spark, sf)
       .groupBy(col("l_orderkey"))
       .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
@@ -201,7 +174,6 @@ class VectorExprSpec extends SparkSpec {
     // collect_list of (doc_id, n)-style structs per blocking key,
     // sorted, expanded to C(k, 2) pairs. Same lambda reference as the
     // long case; edge sizes (empty, singleton, pair) included.
-    VectorExpressions.register(spark)
     val groups = T.lineitem(spark, sf)
       .groupBy(col("l_orderkey"))
       .agg(array_sort(collect_set(
@@ -224,7 +196,6 @@ class VectorExprSpec extends SparkSpec {
 
   test("graft_char_ngrams ≡ array_distinct(transform(substring)) — the " +
     "interpreted trigram form — element-for-element, incl. multi-byte") {
-    VectorExpressions.register(spark)
     val docs = T.documents(spark, sf)
       .select(col("text"))
       .unionByName(Seq("", "ab", "abc", "语言模型测试", "aaaa a",
@@ -250,7 +221,6 @@ class VectorExprSpec extends SparkSpec {
 
   test("graft_adjacent_pairs ≡ the zip_with(slice, slice) lambda, " +
     "pair-for-pair") {
-    VectorExpressions.register(spark)
     val toks = T.documents(spark, sf)
       .select(split(col("text"), " ").as("ts"))
       .unionByName(Seq(Seq.empty[String], Seq("x"), Seq("x", "y"))
@@ -278,7 +248,6 @@ class VectorExprSpec extends SparkSpec {
     // to pre-evaluated LocalTableScans — so only a forced evaluation
     // over a real scan with fallback=false actually proves the
     // generated code compiles.
-    VectorExpressions.register(spark)
     val prevFb = spark.conf.getOption("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
@@ -358,7 +327,6 @@ class VectorExprSpec extends SparkSpec {
     // formulation it replaced — that math is what stream_neardup's
     // DuckDB oracle replays, so any divergence here is a silent
     // cross-engine break the hash compare would catch a round later.
-    VectorExpressions.register(spark)
     val mask = lit((1L << 48) - 1)
     val docs = T.documents(spark, sf).limit(50)
       .filter(size(split(col("text"), " ")) >= 3)
@@ -390,7 +358,6 @@ class VectorExprSpec extends SparkSpec {
   }
 
   test("graft_bpe: sequential lowest-rank/leftmost merges, codegen'd") {
-    VectorExpressions.register(spark)
     // (t,h) < (h,e): "the" merges t+h first, so (h,e) never applies;
     // (a,a) then (aa,a) chains: "aaaaa" -> aa, then [aa,a,a,a] has
     // (a,a) at pos 1 (rank 3 < rank 4 of (aa,a)) -> [aa,aa,a], then
