@@ -166,14 +166,15 @@ object CubeOps {
     }),
 
     // DSv2 ingestion (r8): the SAME two heterogeneous cubes read
-    // through the `genesis-cube` DataSource V2 reader — schema-from-
-    // header runs in EXECUTORS (one InputPartition per cube file, the
-    // driver only lists files: O(1) driver cost at the ~10⁴-cube
-    // corpus, vs parseAll's one-job header batch + per-cube plan).
+    // through the `genesis-cube` DataSource V2 reader with no options —
+    // schema-from-header runs in EXECUTORS (one InputPartition per cube
+    // file, the driver only lists files: no Spark job at all, where
+    // parseAll, which reads through the same source, first runs its
+    // one-job header batch to name the cubes and type `value`).
     // Same cells as cube_union, so the oracle replay differs only in
-    // the cube names (file basenames) and the value type (the shared
-    // relation's DOUBLE vs parseAll's per-cube DECIMAL — both project
-    // double at this driver-facing edge anyway).
+    // the cube names (file basenames) and the value type (the default
+    // DOUBLE vs parseAll's widened DECIMAL — both project double at
+    // this driver-facing edge anyway).
     "cube_source" -> ((s, _) => {
       val paths = Seq(ensureFixture(), ensureArea())
       s.read.format("genesis-cube").load(paths: _*)

@@ -2,6 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType}
 
 /** Parser for the GENESIS cube flat-file format (FIXTURES.md §B — a
   * format specification this engine pins itself to; the reference's
@@ -23,9 +24,13 @@ import org.apache.spark.sql.functions._
   * layout; the data records are parsed in EXECUTORS by Column
   * expressions generated from that layout (split + element_at + cast —
   * all codegen'd; no mapPartitions, no UDF). One measure per output
-  * row (long/normalized form, SURVEY.md §1.2). For a directory of many
-  * cubes, call once per cube and union — each cube has its own schema,
-  * which is the reference's own model (schema-from-header).
+  * row (long/normalized form, SURVEY.md §1.2). Each cube has its own
+  * schema, which is the reference's own model (schema-from-header), and
+  * [[parse]] keeps it: one cube, its axes as wide `dim_*` columns. Many
+  * cubes go through [[CubePipeline.parseAll]] instead — one
+  * `genesis-cube` scan ([[graft.sources.CubeDataSource]]) whose reader
+  * applies the same filter, null tokens and casts per file, typed by
+  * [[measureType]]/[[valueType]].
   */
 object CubeParser {
 
@@ -126,19 +131,38 @@ object CubeParser {
       decimals)
   }
 
-  /** Distributed parse of the data records into the normalized long
-    * schema: (cube, region, dims map→here exploded as dim_<name> cols,
-    * time, measure, value, quality).
+  /** Type [[parse]] gives measure `m`'s values: DECIMAL(18, declared
+    * scale) — exact, and exact to aggregate downstream (no float drift at
+    * 100 TB row counts). When ANY measure of the cube lacks a declaration
+    * the whole cube falls back to DOUBLE: defaulting an undeclared measure
+    * to scale 0 would silently round fractional values, which is worse
+    * than inexact.
     */
-  def parse(spark: SparkSession, path: String, cubeName: String): DataFrame =
-    parseWithLayout(spark, path, readLayout(spark, path, cubeName))
+  def measureType(lo: Layout, m: String): DataType =
+    if (allDeclared(lo)) DecimalType(18, lo.decimals(m)) else DoubleType
 
-  /** Executor-side half of [[parse]], for callers that already hold the
-    * cube's [[Layout]] (the batched [[readHeaders]] path): builds the
-    * data-record parse plan without re-reading the header.
+  private def allDeclared(lo: Layout): Boolean =
+    lo.measures.forall(lo.decimals.contains)
+
+  /** `value`'s type over the cubes of `layouts` once their measure types
+    * are widened to one — by array() coercion within a cube, by a union
+    * across cubes: DECIMAL(18 − min scale + max scale, max scale), exact
+    * since widening only adds digits, or DOUBLE when any cube has an
+    * undeclared measure.
     */
-  def parseWithLayout(spark: SparkSession, path: String,
-      lo: Layout): DataFrame = {
+  def valueType(layouts: Seq[Layout]): DataType =
+    if (!layouts.forall(allDeclared)) DoubleType
+    else layouts.flatMap(lo => lo.measures.map(lo.decimals)) match {
+      case Seq() => DecimalType(18, 0)
+      case scales => DecimalType(18 - scales.min + scales.max, scales.max)
+    }
+
+  /** Distributed parse of one cube's data records into the normalized
+    * long schema: (cube, region, dims map→here exploded as dim_<name>
+    * cols, time, measure, value, quality).
+    */
+  def parse(spark: SparkSession, path: String, cubeName: String): DataFrame = {
+    val lo = readLayout(spark, path, cubeName)
     val toks = split(col("value"), ";", -1)
     val nAxes = lo.axes.size
     // Data records: "D;" prefix and not a header. A tag in slot 2 alone
@@ -163,24 +187,16 @@ object CubeParser {
     }
     val timeCol = slot(nAxes + 2).cast("int").as("time")
 
-    // Value typing honors the declared NKM-STELLEN decimals: a measure
-    // declared with scale s parses to DECIMAL(18,s) — exact, and exact
-    // to aggregate downstream (no float drift at 100 TB row counts).
-    // When ANY measure lacks a declaration the whole cube falls back to
-    // double: defaulting an undeclared measure to scale 0 would silently
-    // round fractional values, which is worse than inexact.
-    // Across measures of differing scales Spark's array() coercion
-    // widens the struct's value field to the least common decimal —
-    // per-cell values stay exact (widening only adds scale).
+    // Value typing honors the declared NKM-STELLEN decimals
+    // ([[measureType]]). Across measures of differing scales Spark's
+    // array() coercion widens the struct's value field to the least
+    // common decimal ([[valueType]]) — per-cell values stay exact.
     // House rule still applies at the edges: [[CubePipeline.facts]] and
     // driver-facing keys cast to double in their FINAL projection.
-    val allDeclared = lo.measures.forall(lo.decimals.contains)
     val measureStructs = lo.measures.zipWithIndex.map { case (m, i) =>
       val v = slot(nAxes + 3 + 2 * i)
       val q = slot(nAxes + 4 + 2 * i)
-      val vTyped =
-        if (allDeclared) v.cast(org.apache.spark.sql.types.DecimalType(18, lo.decimals(m)))
-        else v.cast("double")
+      val vTyped = v.cast(measureType(lo, m))
       struct(
         lit(m).as("measure"),
         when(v.isin(nullValues: _*), lit(null)).otherwise(vTyped).as("value"),

@@ -4,10 +4,13 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.{SparkException, SparkThrowable}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast,
+  EvalMode, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table,
   TableCapability, TableProvider}
@@ -27,30 +30,44 @@ import graft.plans.CubeParser
   * deferred "custom FileFormat" v2, landed (r8) as the scale answer to
   * many-cube ingestion: `spark.read.format("genesis-cube").load(dir)`.
   *
-  * Why a source and not the [[graft.plans.CubePipeline.parseAll]]
-  * plan-composition path: parseAll builds one sub-plan per cube and
-  * needs each cube's header ON THE DRIVER to generate the extraction
-  * Columns — batched (r8) that is one up-front job and O(N) plan
-  * nodes. This source moves schema-from-header INTO THE EXECUTORS:
-  * the driver only lists files (no Spark job at all), each cube file
-  * becomes one [[InputPartition]], and its reader derives the layout
-  * from the K/D header records and streams data records straight to
-  * rows. O(1) driver cost for any cube count — at the GENESIS
-  * corpus's ~10⁴–10⁵ cubes the difference between an ingestion plan
-  * the driver can hold and one it can't.
+  * Why a source and not one plan per cube: a Column-expression parse
+  * ([[CubeParser.parse]]) needs each cube's header ON THE DRIVER to
+  * generate its extraction Columns, so N cubes become N text scans and
+  * N sub-plans — each planned, code-generated and given its own Hadoop
+  * conf broadcast. This source moves schema-from-header INTO THE
+  * EXECUTORS: the driver only lists files (no Spark job at all), each
+  * cube file becomes one [[InputPartition]], and its reader derives the
+  * layout from the K/D header records and streams data records
+  * straight to rows. One scan node for any cube count — at the GENESIS
+  * corpus's ~10⁴–10⁵ cubes the difference between an ingestion plan the
+  * driver can hold and one it can't. [[graft.plans.CubePipeline.parseAll]]
+  * reads its cubes through here.
   *
-  * The two paths stay interchangeable because the output contract is
-  * the SHARED long schema ([[CubeDataSource.schema]] ==
-  * `CubePipeline.normalized`'s shape): heterogeneous per-cube axes
-  * fold into the `dims` map (non-region axes, name-sorted), `value`
-  * is DOUBLE (a single relation needs one type; the exact
-  * declared-scale DECIMAL path remains `CubeParser.parse` — the house
-  * rule already projects doubles at every driver-facing edge), and
-  * the data-record filter + null-token mapping reuse
-  * [[CubeParser.headerTags]]/[[CubeParser.nullValues]] so the reader
-  * and the Column parser can never disagree on a cell
-  * (CubeSourceSpec asserts row-for-row parity; the `cube_source` key
-  * oracle-checks the whole path against DuckDB).
+  * Output: the shared long schema ([[CubeDataSource.schema]] ==
+  * `CubePipeline.normalized`'s shape): heterogeneous per-cube axes fold
+  * into the `dims` map (non-region axes, name-sorted). Cells are typed
+  * exactly as the Column parser types them: each measure's value is
+  * cast to DECIMAL(18, declared scale) (DOUBLE when its cube leaves a
+  * measure's scale undeclared), then to the relation's `value` type —
+  * DOUBLE by default; a user-specified schema may set any DECIMAL or
+  * DOUBLE there and nothing else (parseAll passes the type a union of
+  * per-cube parses would widen to, [[CubeParser.valueType]]). The casts
+  * are Catalyst's own ANSI `Cast`, evaluated interpreted in the reader,
+  * and the data-record filter + null-token mapping reuse
+  * [[CubeParser.headerTags]]/[[CubeParser.nullValues]], so the reader
+  * and the Column parser can never disagree on a cell — same rounding,
+  * trimming and error condition (CubeSourceSpec asserts schema and row
+  * parity; the `cube_source` key oracle-checks the whole path against
+  * DuckDB). A cast error names the file it came from.
+  *
+  * Cube identity = file basename minus extension (the reference's
+  * storage lays one file per cube download, named by cube code
+  * [R: genesapi/storage.py — UNVERIFIED]), or the caller's own name per
+  * path through option `names` (a JSON string array aligned with the
+  * load paths; every named path must be a file, and a file listed
+  * under two names fails). Partition granularity = one file (GENESIS
+  * cubes are single-download sized); in-file splitting is unnecessary
+  * at that shape.
   *
   * Column pruning is pushed down ([[SupportsPushDownRequiredColumns]]):
   * a `select(cube, measure)` builds 2-field rows in the reader, not
@@ -66,65 +83,99 @@ import graft.plans.CubeParser
   * Like parquet's pushdown this is best-effort: every filter is also
   * returned as residual, so Catalyst re-evaluates above the scan and
   * correctness never depends on the pruning.
-  *
-  * Cube identity = file basename minus extension (the reference's
-  * storage lays one file per cube download, named by cube code
-  * [R: genesapi/storage.py — UNVERIFIED]). Partition granularity =
-  * one file (GENESIS cubes are single-download sized); in-file
-  * splitting is unnecessary at that shape.
   */
 class CubeDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "genesis-cube"
-  override def supportsExternalMetadata(): Boolean = false
+  override def supportsExternalMetadata(): Boolean = true
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     CubeDataSource.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: JMap[String, String]): Table =
-    new CubeTable(CubeDataSource.pathsFrom(properties))
+    new CubeTable(CubeDataSource.inputsFrom(properties),
+      CubeDataSource.checked(schema))
 }
 
 object CubeDataSource {
   /** The shared long schema (SURVEY §1.2) — identical shape to
     * `CubePipeline.normalized`. */
-  val schema: StructType = StructType(Seq(
+  val schema: StructType = schemaWith(DoubleType)
+
+  /** [[schema]] with `value` typed `valueType` (a DECIMAL or DOUBLE). */
+  def schemaWith(valueType: DataType): StructType = StructType(Seq(
     StructField("cube", StringType),
     StructField("region", StringType),
     StructField("time", IntegerType),
     StructField("measure", StringType),
-    StructField("value", DoubleType),
+    StructField("value", valueType),
     StructField("quality", StringType),
     StructField("dims", MapType(StringType, StringType, valueContainsNull = true))))
 
-  /** `load(p)` arrives as option `path`; `load(p1, p2, …)` as `paths`,
-    * a JSON string array. Minimal parse (quoted segments), no JSON dep.
+  /** A user-specified schema may differ from [[schema]] only in
+    * `value`'s type, which must be a DECIMAL or DOUBLE. */
+  private[sources] def checked(user: StructType): StructType = {
+    val valueType = user.find(_.name == "value").map(_.dataType)
+    val shape = (s: StructType) => s.map(f => f.name -> f.dataType)
+    require(valueType.exists(t => t == DoubleType || t.isInstanceOf[DecimalType]) &&
+      shape(user) == shape(schemaWith(valueType.get)),
+      s"genesis-cube: schema must be ${schema.simpleString} with value " +
+        s"DECIMAL or DOUBLE, got ${user.simpleString}")
+    schemaWith(valueType.get)
+  }
+
+  /** Cube name of a file without a caller-given one: basename minus extension. */
+  private[sources] def cubeOf(file: Path): String = {
+    val base = file.getName
+    val dot = base.lastIndexOf('.')
+    if (dot > 0) base.substring(0, dot) else base
+  }
+
+  /** The paths to read, each with its cube name when option `names`
+    * gives one. `load(p)` arrives as option `path`; `load(p1, p2, …)` as
+    * `paths`, a JSON string array, and `names` is one too, aligned with
+    * the paths. Named paths are qualified, so one file under two
+    * spellings is one input, and one file under two names is an error.
     */
-  private[sources] def pathsFrom(properties: JMap[String, String]): Seq[String] = {
+  private[sources] def inputsFrom(
+      properties: JMap[String, String]): Seq[(String, Option[String])] = {
     val m = properties.asScala
-    val multi = m.get("paths").toSeq.flatMap { js =>
-      "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(js)
-        .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
+    val json = new ObjectMapper()
+    def strings(key: String): Seq[String] = m.get(key).toSeq
+      .flatMap(js => json.readValue(js, classOf[Array[String]]).toSeq)
+    val paths = strings("paths") ++ m.get("path")
+    require(paths.nonEmpty, "genesis-cube: no path given — use .load(path…)")
+    if (!m.contains("names")) paths.distinct.map(_ -> None)
+    else {
+      val names = strings("names")
+      require(names.size == paths.size, s"genesis-cube: option names gives " +
+        s"${names.size} cube names for ${paths.size} paths")
+      val conf = new Configuration()
+      val named = paths.zip(names).map { case (p, n) =>
+        val hp = new Path(p)
+        hp.getFileSystem(conf).makeQualified(hp).toString -> n
+      }.distinct
+      named.groupBy(_._1).foreach { case (f, ns) =>
+        require(ns.size == 1, s"genesis-cube: $f is listed under " +
+          s"${ns.size} cube names: ${ns.map(_._2).mkString(", ")}")
+      }
+      named.map { case (f, n) => f -> Some(n) }
     }
-    val single = m.get("path").toSeq
-    val all = (multi ++ single).distinct
-    require(all.nonEmpty, "genesis-cube: no path given — use .load(path…)")
-    all.toSeq
   }
 }
 
-private[sources] class CubeTable(paths: Seq[String]) extends Table
-    with SupportsRead {
-  override def name(): String = s"genesis-cube(${paths.mkString(",")})"
-  override def schema(): StructType = CubeDataSource.schema
+private[sources] class CubeTable(inputs: Seq[(String, Option[String])],
+    tableSchema: StructType) extends Table with SupportsRead {
+  override def name(): String = s"genesis-cube(${inputs.map(_._1).mkString(",")})"
+  override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new CubeScanBuilder(paths)
+    new CubeScanBuilder(inputs, tableSchema)
 }
 
-private[sources] class CubeScanBuilder(paths: Seq[String])
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = CubeDataSource.schema
+private[sources] class CubeScanBuilder(inputs: Seq[(String, Option[String])],
+    tableSchema: StructType) extends ScanBuilder
+    with SupportsPushDownRequiredColumns with SupportsPushDownFilters {
+  private var required: StructType = tableSchema
   private var cubeFilters: Seq[Filter] = Nil
   private var rowFilters: Seq[Filter] = Nil
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -166,60 +217,64 @@ private[sources] class CubeScanBuilder(paths: Seq[String])
   override def pushedFilters(): Array[Filter] =
     (cubeFilters ++ rowFilters).toArray
   override def build(): Scan =
-    new CubeScan(paths, required, cubeFilters, rowFilters)
+    new CubeScan(inputs, required, cubeFilters, rowFilters)
 }
 
-private[sources] class CubeScan(paths: Seq[String], required: StructType,
+private[sources] class CubeScan(inputs: Seq[(String, Option[String])],
+    required: StructType,
     cubeFilters: Seq[Filter], rowFilters: Seq[Filter]) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
-    s"genesis-cube ${paths.size} path(s), ReadSchema: ${required.simpleString}" +
+    s"genesis-cube ${inputs.size} path(s), ReadSchema: ${required.simpleString}" +
       (if (cubeFilters.nonEmpty || rowFilters.nonEmpty)
         s", PushedFilters: ${(cubeFilters ++ rowFilters).mkString("[", ", ", "]")}"
       else "")
 
-  /** A file survives when its cube name (basename minus extension)
-    * satisfies every pushed `cube` predicate. */
-  private def keepFile(name: String): Boolean = {
-    val cube = {
-      val dot = name.lastIndexOf('.')
-      if (dot > 0) name.substring(0, dot) else name
-    }
+  /** A file survives when its cube name satisfies every pushed `cube`
+    * predicate. */
+  private def keepFile(cube: String): Boolean =
     cubeFilters.forall {
       case EqualTo(_, v: String) => cube == v
       case In(_, vs) => vs.contains(cube)
       case _ => true
     }
-  }
 
   /** Driver side: expand directories to files — a filesystem LISTING,
     * not a Spark job; one [[InputPartition]] per surviving cube file.
     */
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = new Configuration()
-    val files = paths.flatMap { p =>
+    val files = inputs.flatMap { case (p, name) =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
       val st = fs.getFileStatus(path)
-      if (st.isDirectory)
-        fs.listStatus(path).toSeq.filter(_.isFile).map(_.getPath)
-      else Seq(path)
-    }.filter(f => keepFile(f.getName)).map(_.toString).sorted
-    files.map(f => CubeFilePartition(f): InputPartition).toArray
+      if (!st.isDirectory)
+        Seq(st.getPath -> name.getOrElse(CubeDataSource.cubeOf(st.getPath)))
+      else {
+        require(name.isEmpty, s"genesis-cube: $p is a directory; option " +
+          "names takes one cube file per name")
+        fs.listStatus(path).toSeq.filter(_.isFile)
+          .map(f => f.getPath -> CubeDataSource.cubeOf(f.getPath))
+      }
+    }
+    files.filter(f => keepFile(f._2))
+      .map { case (f, cube) => f.toString -> cube }.distinct.sorted
+      .map { case (f, cube) => CubeFilePartition(f, cube): InputPartition }
+      .toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new CubeReaderFactory(required, rowFilters)
 }
 
-private[sources] case class CubeFilePartition(path: String)
+private[sources] case class CubeFilePartition(path: String, cube: String)
     extends InputPartition
 
 private[sources] class CubeReaderFactory(required: StructType,
     rowFilters: Seq[Filter]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new CubeFileReader(partition.asInstanceOf[CubeFilePartition].path,
-      required, rowFilters)
+    new CubeFileReader(partition.asInstanceOf[CubeFilePartition], required,
+      rowFilters)
 }
 
 /** Executor-side reader for one cube file: pass 1 collects the K/D
@@ -230,16 +285,13 @@ private[sources] class CubeReaderFactory(required: StructType,
   * Two passes over a single cube file are cheap (cubes are
   * per-download sized) and keep memory at one line.
   */
-private[sources] class CubeFileReader(path: String, required: StructType,
-    rowFilters: Seq[Filter]) extends PartitionReader[InternalRow] {
+private[sources] class CubeFileReader(part: CubeFilePartition,
+    required: StructType, rowFilters: Seq[Filter])
+    extends PartitionReader[InternalRow] {
 
+  private val path = part.path
   private val hPath = new Path(path)
   private val fs = hPath.getFileSystem(new Configuration())
-  private val cubeName = {
-    val base = hPath.getName
-    val dot = base.lastIndexOf('.')
-    if (dot > 0) base.substring(0, dot) else base
-  }
 
   private def open() = new java.io.BufferedReader(
     new java.io.InputStreamReader(fs.open(hPath),
@@ -252,7 +304,7 @@ private[sources] class CubeFileReader(path: String, required: StructType,
         .filter(l => l.startsWith("K;") ||
           CubeParser.headerTags.exists(t => l.startsWith(s"D;$t;")))
         .map(_.split(";", -1).toSeq).toSeq
-      CubeParser.layoutFromHeader(hdr, path, cubeName)
+      CubeParser.layoutFromHeader(hdr, path, part.cube)
     } finally br.close()
   }
 
@@ -261,12 +313,42 @@ private[sources] class CubeFileReader(path: String, required: StructType,
   private val expectedLen = 2 + nAxes + 2 * nMeasures
   private val timeRe = "^-?[0-9]+$".r
   private val nullValues = CubeParser.nullValues.toSet
+  private val cube = UTF8String.fromString(layout.cube)
+  private val measureNames = layout.measures.map(UTF8String.fromString)
   // dims = non-region axes, name-sorted (matches CubePipeline.normalized's
   // sorted dim_* fold) with their 0-based token slots (slot 0 = "D").
   private val dimAxes: Seq[(String, Int)] = layout.axes.zipWithIndex.tail
     .map { case (a, i) => (a, i + 1) }.sortBy(_._1)
 
-  /** Pushed `time` predicates as one conjunction over the parsed time
+  // `time` and `value` are typed by Catalyst's own ANSI Cast, evaluated
+  // interpreted over a one-token row: the same casts CubeParser.parse
+  // applies (a measure to DECIMAL(18, declared scale) or DOUBLE, widened
+  // to its cube's type as array() coercion does there), then to the
+  // relation's `value` type. Built once per file and measure.
+  private val token = new GenericInternalRow(1)
+  private def cast(e: Expression, t: DataType): Expression =
+    if (e.dataType == t) e else Cast(e, t, None, EvalMode.ANSI)
+  private val tokenRef = BoundReference(0, StringType, nullable = true)
+  private val timeCast = cast(tokenRef, IntegerType)
+  private val valueCasts: IndexedSeq[Expression] =
+    required.find(_.name == "value").map { f =>
+      val cubeType = CubeParser.valueType(Seq(layout))
+      layout.measures.map(m => cast(cast(cast(tokenRef,
+        CubeParser.measureType(layout, m)), cubeType), f.dataType))
+    }.getOrElse(Nil).toIndexedSeq
+
+  /** `e` over one token; a cast error keeps its condition and names the file. */
+  private def typed(e: Expression, tok: String): Any = {
+    token.update(0, UTF8String.fromString(tok))
+    try e.eval(token) catch {
+      case err: Exception with SparkThrowable =>
+        throw new SparkException(s"genesis-cube: $path: ${err.getMessage}",
+          err, Option(err.getCondition), err.getMessageParameters.asScala.toMap,
+          err.getQueryContext)
+    }
+  }
+
+  /** Pushed `time` predicates as one conjunction over the typed time
     * token — evaluated BEFORE any row is built, so a year-filtered
     * query never materializes off-year records. Filters stay residual
     * above the scan, so an unhandled shape here is only a missed
@@ -304,9 +386,8 @@ private[sources] class CubeFileReader(path: String, required: StructType,
         (toks.length == expectedLen &&
           timeRe.matches(toks(nAxes + 1))))
 
-  private def rowsOf(toks: Array[String]): Iterator[InternalRow] = {
+  private def rowsOf(toks: Array[String], time: Int): Iterator[InternalRow] = {
     val region = UTF8String.fromString(toks(1))
-    val time = toks(nAxes + 1).toInt
     val dims = new ArrayBasedMapData(
       new GenericArrayData(dimAxes.map(d =>
         UTF8String.fromString(d._1): AnyRef).toArray[Any]),
@@ -319,15 +400,12 @@ private[sources] class CubeFileReader(path: String, required: StructType,
       var j = 0
       while (j < required.length) {
         row.update(j, required.fields(j).name match {
-          case "cube" => UTF8String.fromString(layout.cube)
+          case "cube" => cube
           case "region" => region
           case "time" => time
-          case "measure" => UTF8String.fromString(layout.measures(i))
-          // fail loudly on malformed numerics, like the ANSI cast the
-          // Column parser applies — a silent null here would diverge.
+          case "measure" => measureNames(i)
           case "value" =>
-            if (nullValues.contains(v)) null
-            else java.lang.Double.valueOf(v.toDouble)
+            if (nullValues.contains(v)) null else typed(valueCasts(i), v)
           case "quality" => UTF8String.fromString(q)
           case "dims" => dims
           case other => sys.error(s"genesis-cube: unknown column $other")
@@ -344,8 +422,10 @@ private[sources] class CubeFileReader(path: String, required: StructType,
       if (line == null) exhausted = true
       else {
         val toks = line.split(";", -1)
-        if (isData(toks) && timeOk(toks(nAxes + 1).toInt))
-          pending = rowsOf(toks)
+        if (isData(toks)) {
+          val time = typed(timeCast, toks(nAxes + 1)).asInstanceOf[Int]
+          if (timeOk(time)) pending = rowsOf(toks, time)
+        }
       }
     }
     if (pending.hasNext) { current = pending.next(); true } else false

@@ -1,6 +1,8 @@
 package graft
 
 import graft.plans.CubePipeline
+import org.apache.spark.sql.catalyst.plans.logical.Union
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -58,6 +60,20 @@ class CubePipelineSpec extends SparkSpec {
     assert(jobs == 1,
       s"parseAll ran $jobs driver jobs for ${cubes.size} cubes; " +
         "the batched header pass must run exactly 1")
+  }
+
+  test("parseAll over N cubes plans exactly one scan and no Union") {
+    // A third cube, so "one" is not a coincidence of two: one
+    // genesis-cube relation reads every file, one input partition each.
+    val third = Files.createTempDirectory("cube3").resolve("area3.csv")
+    Files.copy(java.nio.file.Paths.get(cubes(1)._1), third)
+    val all = CubePipeline.parseAll(spark, cubes :+ (third.toString -> "area3"))
+    val plan = all.queryExecution.optimizedPlan
+    assert(plan.collect { case u: Union => u }.isEmpty, plan.treeString)
+    val leaves = plan.collectLeaves()
+    assert(leaves.size == 1 && leaves.head.isInstanceOf[DataSourceV2ScanRelation],
+      plan.treeString)
+    assert(all.queryExecution.toRdd.getNumPartitions == 3)
   }
 
   test("facts nest measures per (cube, region, time, dims) cell") {
