@@ -43,10 +43,6 @@ object Multimodal {
     }
   }
 
-  /** Per-row convenience form (specs, property tests). */
-  def decodeStub(payload: Array[Byte]): Array[Float] =
-    new StubDecoder().decode(payload)
-
   /** Binary-payload frame: (doc_id, payload BINARY, meta STRUCT). In a
     * real pipeline the payload arrives from the source as bytes; here
     * the text corpus stands in.

@@ -20,11 +20,12 @@ import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType}
   *     `...`, `/`, `x` parse to NULL-with-flag.
   *
   * Architecture (Spark-first, 100 TB-ready): the header is a few dozen
-  * lines — parsed on the DRIVER from a `limit`ed read to derive the
-  * layout; the data records are parsed in EXECUTORS by Column
-  * expressions generated from that layout (split + element_at + cast —
-  * all codegen'd; no mapPartitions, no UDF). One measure per output
-  * row (long/normalized form, SURVEY.md §1.2). Each cube has its own
+  * lines — filtered to the K;/D;<TAG>; prefix space in executors and
+  * collected to the DRIVER ([[readHeaders]]) to derive the layout; the
+  * data records are parsed in EXECUTORS by Column expressions generated
+  * from that layout (split + element_at + cast — all codegen'd; no
+  * mapPartitions, no UDF). One measure per output row
+  * (long/normalized form, SURVEY.md §1.2). Each cube has its own
   * schema, which is the reference's own model (schema-from-header), and
   * [[parse]] keeps it: one cube, its axes as wide `dim_*` columns. Many
   * cubes go through [[CubePipeline.parseAll]] instead — one
@@ -51,18 +52,6 @@ object CubeParser {
   val nullValues = Seq("-", "...", "…", "/", "x", ".")
 
   private val headerRecordRe = "^(K;|D;(DQA|DQZ|DQI|QEI);)"
-
-  /** Parse the K/D header records (driver-side; header is O(10) lines). */
-  def readLayout(spark: SparkSession, path: String, cubeName: String): Layout = {
-    // Header records all sit in the K;/D;<TAG>; prefix space — filter
-    // THEN collect, so only tens of lines ever reach the driver even
-    // if the file is huge.
-    val hdr = spark.read.text(path)
-      .filter(col("value").rlike(headerRecordRe))
-      // bounded-collect: K;/D; header records — O(10) lines per cube.
-      .collect().map(_.getString(0).split(";", -1).toSeq)
-    layoutFromHeader(hdr, path, cubeName)
-  }
 
   /** Header records of MANY cube files in ONE Spark job: a single
     * multi-path text read tags each line with its source file
@@ -96,9 +85,7 @@ object CubeParser {
       }
   }
 
-  /** Layout derivation over already-collected header lines — shared by
-    * the per-file and batched header paths.
-    */
+  /** Layout derivation over header lines collected by [[readHeaders]]. */
   def layoutFromHeader(hdr: Seq[Seq[String]], path: String,
       cubeName: String): Layout = {
     val axes = hdr.collect { case Seq("D", "DQA", name, _*) => name }.toSeq
@@ -162,7 +149,8 @@ object CubeParser {
     * cols, time, measure, value, quality).
     */
   def parse(spark: SparkSession, path: String, cubeName: String): DataFrame = {
-    val lo = readLayout(spark, path, cubeName)
+    val lo = layoutFromHeader(
+      readHeaders(spark, Seq(path)).getOrElse(path, Seq.empty), path, cubeName)
     val toks = split(col("value"), ";", -1)
     val nAxes = lo.axes.size
     // Data records: "D;" prefix and not a header. A tag in slot 2 alone

@@ -8,6 +8,9 @@ class CubeParserSpec extends SparkSpec {
 
   private val fixture = getClass.getResource("/cube_12411_mini.csv").getPath
   private def bd(s: String) = new java.math.BigDecimal(s)
+  private def layoutOf(path: String, cube: String) =
+    CubeParser.layoutFromHeader(
+      CubeParser.readHeaders(spark, Seq(path))(path), path, cube)
 
   test("runtime fixture constant matches the test-resource fixture file") {
     // CubeOps pins the fixture in main code (runtime keys can't load
@@ -19,7 +22,7 @@ class CubeParserSpec extends SparkSpec {
   }
 
   test("layout derives from K/D header records") {
-    val lo = CubeParser.readLayout(spark, fixture, "12411_mini")
+    val lo = layoutOf(fixture, "12411_mini")
     assert(lo.axes == Seq("DINSG", "GES"))
     assert(lo.timeAxis == "JAHR")
     assert(lo.measures == Seq("BEVSTD"))
@@ -121,7 +124,7 @@ class CubeParserSpec extends SparkSpec {
       "D;QEI;DINSG;JAHR;GHOST;M1",
       "D;01;2020;42;e").mkString("\n"))
     val e = intercept[RuntimeException] {
-      CubeParser.readLayout(spark, tmp.toString, "bad")
+      layoutOf(tmp.toString, "bad")
     }
     assert(e.getMessage.contains("GHOST"))
   }

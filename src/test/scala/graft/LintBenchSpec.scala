@@ -110,6 +110,21 @@ class LintBenchSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no_such_key, nor_this"), e.getMessage)
   }
 
+  test("surface counts: 244 keys / 240 oracled — bump HERE plus README/SURVEY") {
+    // The tracked counts went stale three rounds running (r10 verdict
+    // directive #5): this assertion is the single source of truth. A
+    // new key fails it on purpose — update the expected counts here
+    // AND the two doc call-sites in the same commit:
+    //   README.md          ("§2 is the operator contract: N keys, M …")
+    //   SURVEY.md §2 totals ("Totals: N operator keys … M with …")
+    assert(SparkEntry.queries.size == 244,
+      s"queries.size = ${SparkEntry.queries.size}")
+    assert(SparkEntry.oracleSql.size == 240,
+      s"oracleSql.size = ${SparkEntry.oracleSql.size}")
+    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"oracles without a query: $orphans")
+  }
+
   test("no detail file at all fails") {
     assert(LintBench.lint(Seq.empty, Set("a")).nonEmpty)
   }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Skew
+import graft.sources.Sinks
 import org.apache.spark.sql.functions._
 
 /** Scale-mechanics evidence: bucketed co-located joins eliminate the
@@ -14,10 +15,8 @@ class ScaleSpec extends SparkSpec {
     // warehouse dir is a temp dir set at session build (SparkSpec)
     val o = T.orders(spark, sf).select("o_orderkey", "o_custkey", "o_totalprice")
     val c = T.customer(spark, sf).select("c_custkey", "c_name")
-    o.write.mode("overwrite").bucketBy(8, "o_custkey").sortBy("o_custkey")
-      .saveAsTable("orders_b")
-    c.write.mode("overwrite").bucketBy(8, "c_custkey").sortBy("c_custkey")
-      .saveAsTable("customer_b")
+    Sinks.writeBucketed(o, "orders_b", "o_custkey", 8)
+    Sinks.writeBucketed(c, "customer_b", "c_custkey", 8)
     // disable broadcast so the join strategy must exploit bucketing
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
