@@ -173,8 +173,10 @@ object Bench {
     // runs reuse them: GraftSession sizes the codegen cache to hold a
     // whole sweep (at Spark's 100 entries a second pass compiled about
     // as many classes as the first). A few keys still compile a class
-    // or two per run: AQE numbers their whole-stage classes in the
-    // order concurrent stages finish, so the class name varies.
+    // or two per run: AQE's re-planning picks between two stage shapes
+    // from run to run, and the driver and the executors compile each
+    // generated class under different class loaders, so each shape's
+    // first use in a loader compiles it again.
     keys.foreach { case (_, fn) =>
       try run(fn) catch { case _: Throwable => () }
     }

@@ -25,7 +25,8 @@ package graft
   * catch-all turned each throw into "no lines", so the gate was
   * vacuously green while scanning zero files). [[LintCollect.Scan]]
   * carries the visited file/site counts so a silent-skip regression
-  * is itself testable (the spec pins files > 0 and sites > 0).
+  * is itself testable (the spec checks both against its own walk of
+  * the tree).
   *
   * No SparkSession — a plain source scan, milliseconds; runs with
   * [[LintBench]] at round close.

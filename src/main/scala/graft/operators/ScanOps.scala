@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * [R: genesapi/fetch.py, genesapi/storage.py — UNVERIFIED]); here the
   * scan surface is columnar parquet with Catalyst-driven projection and
   * predicate pushdown, and the cube-flat-file analogue is a text parse
-  * (full parser lives in graft.plans.CubeParser).
+  * (the full parser is the `genesis-cube` reader,
+  * graft.sources.CubeDataSource).
   */
 object ScanOps {
   type Q = (SparkSession, String) => DataFrame

@@ -12,11 +12,12 @@ import org.apache.spark.sql.functions._
   * The inputs are the FIXTURES.md §B miniature cubes, materialized once
   * under /tmp (deterministic content, idempotent write) — the driver's
   * sf parquet dirs don't carry a cube file, and the parse path itself
-  * (schema-from-header → positional Column extraction in executors) is
-  * what these keys put under the oracle gate. Scale is exercised
-  * elsewhere: the parser's data pass is a distributed text scan whose
-  * cost grows only with data records (ScaleSpec), and the header
-  * collect is O(10) rows by construction.
+  * (schema-from-header → the `genesis-cube` reader's positional
+  * extraction in executors) is what these keys put under the oracle
+  * gate. Scale is exercised elsewhere: the reader's data pass is one
+  * input partition per cube file whose cost grows only with data
+  * records (ScaleSpec), and the header collect is O(10) rows by
+  * construction.
   */
 object CubeOps {
   type Q = (SparkSession, String) => DataFrame
@@ -125,9 +126,9 @@ object CubeOps {
     // double only here, in the driver-facing final projection.
     "cube_parse" -> ((s, _) => {
       val path = ensureFixture()
-      CubeParser.parse(s, path, "12411_mini")
-        .select(col("cube"), col("region"), col("dim_GES"), col("time"),
-          col("measure"), col("value").cast("double").as("value"),
+      CubePipeline.parseAll(s, Seq(path -> "12411_mini"))
+        .select(col("cube"), col("region"), col("dims")("GES").as("dim_GES"),
+          col("time"), col("measure"), col("value").cast("double").as("value"),
           col("quality"))
         .orderBy("region", "dim_GES", "time")
     }),
@@ -190,16 +191,14 @@ object CubeOps {
     // differs too much across engines to hash-match.)
     "cube_catalog" -> ((s, _) => {
       val path = ensureFixture()
-      CubePipeline.catalog(CubePipeline.normalized(
-        CubeParser.parse(s, path, "12411_mini")))
+      CubePipeline.catalog(CubePipeline.parseAll(s, Seq(path -> "12411_mini")))
     }),
 
     // Flag-aware aggregation: sum excluding provisional (`p`) cells,
     // with per-flag cell counts as explicit columns.
     "cube_agg_flags" -> ((s, _) => {
       val path = ensureFixture()
-      val normalized = CubePipeline.normalized(
-        CubeParser.parse(s, path, "12411_mini"))
+      val normalized = CubePipeline.parseAll(s, Seq(path -> "12411_mini"))
       val flagCols = CubePipeline.knownFlags.map(f => col(s"n_$f"))
       CubePipeline.aggFlags(normalized, exclude = Set("p"))
         .select(Seq(col("cube"), col("measure"), col("time"),
@@ -216,8 +215,7 @@ object CubeOps {
     // conditional aggregation over the same CSV.
     "cube_region_rollup" -> ((s, _) => {
       val path = ensureAgs()
-      val cells = CubePipeline.normalized(
-        CubeParser.parse(s, path, "ags_mini"))
+      val cells = CubePipeline.parseAll(s, Seq(path -> "ags_mini"))
       CubePipeline.regionRollup(cells, exclude = Set("p"))
         .select(col("cube"), col("measure"), col("time"), col("level"),
           col("region_prefix"),
@@ -247,10 +245,8 @@ object CubeOps {
     // column showing provenance. Oracle replays the ranked-window
     // merge over both CSVs.
     "cube_latest" -> ((s, _) => {
-      val v1 = CubePipeline.normalized(
-        CubeParser.parse(s, ensureFixture(), "12411"))
-      val v2 = CubePipeline.normalized(
-        CubeParser.parse(s, ensureFixtureV2(), "12411"))
+      val v1 = CubePipeline.parseAll(s, Seq(ensureFixture() -> "12411"))
+      val v2 = CubePipeline.parseAll(s, Seq(ensureFixtureV2() -> "12411"))
       CubePipeline.latestRevision(Seq(v1 -> 1, v2 -> 2))
         .select(col("cube"), col("region"),
           to_json(col("dims")).as("dims_json"), col("time"),
@@ -294,7 +290,7 @@ object CubeOps {
     // small delta.
     "cube_diff" -> ((s, _) => {
       def cells(path: String) =
-        CubePipeline.normalized(CubeParser.parse(s, path, "12411"))
+        CubePipeline.parseAll(s, Seq(path -> "12411"))
           .select(col("region"), to_json(col("dims")).as("dims_json"),
             col("time"), col("value").cast("double").as("value"))
       cellDiff(cells(ensureFixture()), cells(ensureFixtureV2()))
@@ -327,7 +323,7 @@ object CubeOps {
 
   // Oracle side reads the SAME /tmp files: ragged semicolon rows via
   // null_padding, then the same shape-anchored data filter and
-  // positional extraction the Spark parser generates.
+  // positional extraction the `genesis-cube` reader performs.
   private def duckReadOf(path: String) =
     s"""read_csv('$path', delim=';', header=false, quote='"',
        |  null_padding=true, auto_detect=false,

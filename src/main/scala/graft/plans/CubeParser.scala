@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType}
 
@@ -19,19 +19,15 @@ import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType}
   *     then per measure (value, quality-flag) pairs. Values `-`, `…`,
   *     `...`, `/`, `x` parse to NULL-with-flag.
   *
-  * Architecture (Spark-first, 100 TB-ready): the header is a few dozen
-  * lines — filtered to the K;/D;<TAG>; prefix space in executors and
-  * collected to the DRIVER ([[readHeaders]]) to derive the layout; the
-  * data records are parsed in EXECUTORS by Column expressions generated
-  * from that layout (split + element_at + cast — all codegen'd; no
-  * mapPartitions, no UDF). One measure per output row
-  * (long/normalized form, SURVEY.md §1.2). Each cube has its own
-  * schema, which is the reference's own model (schema-from-header), and
-  * [[parse]] keeps it: one cube, its axes as wide `dim_*` columns. Many
-  * cubes go through [[CubePipeline.parseAll]] instead — one
-  * `genesis-cube` scan ([[graft.sources.CubeDataSource]]) whose reader
-  * applies the same filter, null tokens and casts per file, typed by
-  * [[measureType]]/[[valueType]].
+  * This object holds the format's header rules; the data records are
+  * parsed in one place, the `genesis-cube` reader
+  * ([[graft.sources.CubeDataSource]]), which derives each file's
+  * [[Layout]] with [[layoutFromHeader]] and types its cells by
+  * [[measureType]]/[[valueType]]. [[CubePipeline.parseAll]] first
+  * collects every cube's header lines to the DRIVER in one job
+  * ([[readHeaders]]) to name the cubes and fix `value`'s type, then
+  * reads all files through that reader: one measure per output row
+  * (long/normalized form, SURVEY.md §1.2).
   */
 object CubeParser {
 
@@ -42,14 +38,6 @@ object CubeParser {
       timeAxis: String,         // e.g. JAHR
       measures: Seq[String],    // measure names, QEI order
       decimals: Map[String, Int])
-
-  /** Format constants, shared with [[graft.sources.CubeDataSource]]
-    * (the DSv2 reader must filter/null-map byte-identically to the
-    * Column-expression parser so the two ingestion paths can never
-    * disagree on a cell).
-    */
-  val headerTags = Set("DQ", "DQA", "DQZ", "DQI", "QEI")
-  val nullValues = Seq("-", "...", "…", "/", "x", ".")
 
   private val headerRecordRe = "^(K;|D;(DQA|DQZ|DQI|QEI);)"
 
@@ -118,7 +106,7 @@ object CubeParser {
       decimals)
   }
 
-  /** Type [[parse]] gives measure `m`'s values: DECIMAL(18, declared
+  /** Type of measure `m`'s values within its cube: DECIMAL(18, declared
     * scale) — exact, and exact to aggregate downstream (no float drift at
     * 100 TB row counts). When ANY measure of the cube lacks a declaration
     * the whole cube falls back to DOUBLE: defaulting an undeclared measure
@@ -131,11 +119,10 @@ object CubeParser {
   private def allDeclared(lo: Layout): Boolean =
     lo.measures.forall(lo.decimals.contains)
 
-  /** `value`'s type over the cubes of `layouts` once their measure types
-    * are widened to one — by array() coercion within a cube, by a union
-    * across cubes: DECIMAL(18 − min scale + max scale, max scale), exact
-    * since widening only adds digits, or DOUBLE when any cube has an
-    * undeclared measure.
+  /** `value`'s type over the cubes of `layouts`: the one type every
+    * [[measureType]] of them widens to, DECIMAL(18 − min scale + max
+    * scale, max scale), exact since widening only adds digits, or DOUBLE
+    * when any cube has an undeclared measure.
     */
   def valueType(layouts: Seq[Layout]): DataType =
     if (!layouts.forall(allDeclared)) DoubleType
@@ -143,65 +130,4 @@ object CubeParser {
       case Seq() => DecimalType(18, 0)
       case scales => DecimalType(18 - scales.min + scales.max, scales.max)
     }
-
-  /** Distributed parse of one cube's data records into the normalized
-    * long schema: (cube, region, dims map→here exploded as dim_<name>
-    * cols, time, measure, value, quality).
-    */
-  def parse(spark: SparkSession, path: String, cubeName: String): DataFrame = {
-    val lo = layoutFromHeader(
-      readHeaders(spark, Seq(path)).getOrElse(path, Seq.empty), path, cubeName)
-    val toks = split(col("value"), ";", -1)
-    val nAxes = lo.axes.size
-    // Data records: "D;" prefix and not a header. A tag in slot 2 alone
-    // does NOT make a row a header — a data record whose first axis
-    // value collides with a tag is still data when it has the layout's
-    // exact record shape (token count AND an integer in the time slot;
-    // header D-rows carry a column NAME there). rlike, not cast: ANSI
-    // mode throws on a malformed cast instead of nulling.
-    val expectedLen = 2 + nAxes + 2 * lo.measures.size
-    val data = spark.read.text(path)
-      .filter(col("value").startsWith("D;") &&
-              (!element_at(toks, 2).isin(headerTags.toSeq: _*) ||
-               (size(toks) === expectedLen &&
-                element_at(toks, nAxes + 2).rlike("^-?[0-9]+$"))))
-      .select(toks.as("t"))
-
-    // QEI order: D; axes… time measures… — each measure value is
-    // followed by its quality flag. element_at is 1-based; slot 1 = "D".
-    def slot(i: Int): Column = element_at(col("t"), i)
-    val axisCols = lo.axes.zipWithIndex.map { case (a, i) =>
-      slot(i + 2).as(s"dim_$a")
-    }
-    val timeCol = slot(nAxes + 2).cast("int").as("time")
-
-    // Value typing honors the declared NKM-STELLEN decimals
-    // ([[measureType]]). Across measures of differing scales Spark's
-    // array() coercion widens the struct's value field to the least
-    // common decimal ([[valueType]]) — per-cell values stay exact.
-    // House rule still applies at the edges: [[CubePipeline.facts]] and
-    // driver-facing keys cast to double in their FINAL projection.
-    val measureStructs = lo.measures.zipWithIndex.map { case (m, i) =>
-      val v = slot(nAxes + 3 + 2 * i)
-      val q = slot(nAxes + 4 + 2 * i)
-      val vTyped = v.cast(measureType(lo, m))
-      struct(
-        lit(m).as("measure"),
-        when(v.isin(nullValues: _*), lit(null)).otherwise(vTyped).as("value"),
-        q.as("quality"))
-    }
-
-    // First axis is the regional code by GENESIS convention; the rest
-    // stay as dim_<name> columns.
-    val outCols = Seq(
-      col("cube"),
-      col(s"dim_${lo.axes.head}").as("region"),
-      col("time"), col("m.measure").as("measure"),
-      col("m.value").as("value"), col("m.quality").as("quality")) ++
-      lo.axes.tail.map(a => col(s"dim_$a"))
-    data
-      .select((lit(lo.cube).as("cube") +: axisCols :+ timeCol :+
-        explode(array(measureStructs: _*)).as("m")): _*)
-      .select(outCols: _*)
-  }
 }

@@ -13,24 +13,12 @@ import graft.sources.CubeDataSource
   * transform; [[graft.sources.Sinks]] handles export/storage.
   *
   * Heterogeneity strategy: every cube declares its own axes
-  * (schema-from-header), so per-cube frames carry different `dim_*`
-  * columns. [[normalized]] folds them into one `dims MAP<STRING,
-  * STRING>` column — the shared long schema (SURVEY.md §1.2) that
-  * unions across cubes and partitions cleanly by (cube, time) at
-  * 100 TB.
+  * (schema-from-header), and the `genesis-cube` reader folds each
+  * cube's non-region axes into one `dims MAP<STRING, STRING>` column —
+  * the shared long schema (SURVEY.md §1.2) that unions across cubes
+  * and partitions cleanly by (cube, time) at 100 TB.
   */
 object CubePipeline {
-
-  /** Fold per-cube `dim_*` columns into a single `dims` map. */
-  def normalized(parsed: DataFrame): DataFrame = {
-    val dimCols = parsed.columns.filter(_.startsWith("dim_")).sorted
-    val entries = dimCols.flatMap(c =>
-      Seq(lit(c.stripPrefix("dim_")), col(c)))
-    parsed.select(col("cube"), col("region"), col("time"),
-      col("measure"), col("value"), col("quality"),
-      (if (entries.isEmpty) typedLit(Map.empty[String, String])
-       else map(entries: _*)).as("dims"))
-  }
 
   /** Parse a set of (path, cubeName) cube files into the normalized
     * long form — the corpus-wide table the reference stores per download.
@@ -41,14 +29,13 @@ object CubePipeline {
     * ~10⁴–10⁵ cubes the per-cube loop was a sequential driver-latency
     * bottleneck (the r7 verdict's one scale-killer), while a single
     * job's cost is independent of cube count. The layouts fix `value`'s
-    * type ([[CubeParser.valueType]]: the type a union of per-cube
-    * [[CubeParser.parse]]s would widen to). The data records are then
-    * ONE `genesis-cube` scan over every path
-    * ([[graft.sources.CubeDataSource]], the caller's cube names through
-    * its `names` option): one plan node and one input partition per
-    * file, each file typed in its reader exactly as `CubeParser.parse`
-    * types it. A plan of one text scan per cube would be planned,
-    * code-generated and given its own Hadoop conf broadcast per cube.
+    * type ([[CubeParser.valueType]]: the one type every cube's measures
+    * widen to). The data records are then ONE `genesis-cube` scan over
+    * every path ([[graft.sources.CubeDataSource]], the caller's cube
+    * names through its `names` option): one plan node and one input
+    * partition per file. A plan of one text scan per cube would be
+    * planned, code-generated and given its own Hadoop conf broadcast per
+    * cube.
     * Lazy past the header job: O(1) driver jobs and one scan for N
     * cubes, both asserted in CubePipelineSpec.
     */

@@ -30,11 +30,11 @@ import graft.plans.CubeParser
   * deferred "custom FileFormat" v2, landed (r8) as the scale answer to
   * many-cube ingestion: `spark.read.format("genesis-cube").load(dir)`.
   *
-  * Why a source and not one plan per cube: a Column-expression parse
-  * ([[CubeParser.parse]]) needs each cube's header ON THE DRIVER to
-  * generate its extraction Columns, so N cubes become N text scans and
-  * N sub-plans — each planned, code-generated and given its own Hadoop
-  * conf broadcast. This source moves schema-from-header INTO THE
+  * This reader is the engine's one parser of GENESIS data records;
+  * [[CubeParser]] holds the header rules. Why a source and not one plan
+  * per cube: a parse generated from each cube's header ON THE DRIVER
+  * makes N cubes N text scans and N sub-plans — each planned,
+  * code-generated and given its own Hadoop conf broadcast. This source moves schema-from-header INTO THE
   * EXECUTORS: the driver only lists files (no Spark job at all), each
   * cube file becomes one [[InputPartition]], and its reader derives the
   * layout from the K/D header records and streams data records
@@ -43,21 +43,18 @@ import graft.plans.CubeParser
   * driver can hold and one it can't. [[graft.plans.CubePipeline.parseAll]]
   * reads its cubes through here.
   *
-  * Output: the shared long schema ([[CubeDataSource.schema]] ==
-  * `CubePipeline.normalized`'s shape): heterogeneous per-cube axes fold
-  * into the `dims` map (non-region axes, name-sorted). Cells are typed
-  * exactly as the Column parser types them: each measure's value is
-  * cast to DECIMAL(18, declared scale) (DOUBLE when its cube leaves a
-  * measure's scale undeclared), then to the relation's `value` type —
-  * DOUBLE by default; a user-specified schema may set any DECIMAL or
-  * DOUBLE there and nothing else (parseAll passes the type a union of
-  * per-cube parses would widen to, [[CubeParser.valueType]]). The casts
-  * are Catalyst's own ANSI `Cast`, evaluated interpreted in the reader,
-  * and the data-record filter + null-token mapping reuse
-  * [[CubeParser.headerTags]]/[[CubeParser.nullValues]], so the reader
-  * and the Column parser can never disagree on a cell — same rounding,
-  * trimming and error condition (CubeSourceSpec asserts schema and row
-  * parity; the `cube_source` key oracle-checks the whole path against
+  * Output: the shared long schema ([[CubeDataSource.schema]]):
+  * heterogeneous per-cube axes fold into the `dims` map (non-region
+  * axes, name-sorted). Each measure's value is cast to DECIMAL(18,
+  * declared scale) (DOUBLE when its cube leaves a measure's scale
+  * undeclared, [[CubeParser.measureType]]), widened to its cube's type,
+  * then cast to the relation's `value` type — DOUBLE by default; a
+  * user-specified schema may set any DECIMAL or DOUBLE there and nothing
+  * else (parseAll passes the type every cube it reads widens to,
+  * [[CubeParser.valueType]]). The casts are Catalyst's own ANSI `Cast`,
+  * evaluated interpreted in the reader: HALF_UP rounding, trimming and
+  * the overflow error condition are Spark's (CubeSourceSpec pins
+  * them; the `cube_source` key oracle-checks the whole path against
   * DuckDB). A cast error names the file it came from.
   *
   * Cube identity = file basename minus extension (the reference's
@@ -96,8 +93,7 @@ class CubeDataSource extends TableProvider with DataSourceRegister {
 }
 
 object CubeDataSource {
-  /** The shared long schema (SURVEY §1.2) — identical shape to
-    * `CubePipeline.normalized`. */
+  /** The shared long schema (SURVEY §1.2). */
   val schema: StructType = schemaWith(DoubleType)
 
   /** [[schema]] with `value` typed `valueType` (a DECIMAL or DOUBLE). */
@@ -280,7 +276,7 @@ private[sources] class CubeReaderFactory(required: StructType,
 /** Executor-side reader for one cube file: pass 1 collects the K/D
   * header-candidate lines and derives the [[CubeParser.Layout]]
   * (shape-aware — a data row whose first axis value collides with a
-  * header tag is resolved exactly like the Column parser does); pass 2
+  * header tag stays data, see `isData`); pass 2
   * streams data records, emitting one row per (record, measure).
   * Two passes over a single cube file are cheap (cubes are
   * per-download sized) and keep memory at one line.
@@ -297,12 +293,17 @@ private[sources] class CubeFileReader(part: CubeFilePartition,
     new java.io.InputStreamReader(fs.open(hPath),
       java.nio.charset.StandardCharsets.UTF_8))
 
+  // Format constants: the tags of header records, and the value tokens
+  // that mean NULL (nil, secret, not applicable) with the flag kept.
+  private val headerTags = Set("DQ", "DQA", "DQZ", "DQI", "QEI")
+  private val nullValues = Set("-", "...", "…", "/", "x", ".")
+
   private val layout: CubeParser.Layout = {
     val br = open()
     try {
       val hdr = Iterator.continually(br.readLine()).takeWhile(_ != null)
         .filter(l => l.startsWith("K;") ||
-          CubeParser.headerTags.exists(t => l.startsWith(s"D;$t;")))
+          headerTags.exists(t => l.startsWith(s"D;$t;")))
         .map(_.split(";", -1).toSeq).toSeq
       CubeParser.layoutFromHeader(hdr, path, part.cube)
     } finally br.close()
@@ -312,19 +313,17 @@ private[sources] class CubeFileReader(part: CubeFilePartition,
   private val nMeasures = layout.measures.size
   private val expectedLen = 2 + nAxes + 2 * nMeasures
   private val timeRe = "^-?[0-9]+$".r
-  private val nullValues = CubeParser.nullValues.toSet
   private val cube = UTF8String.fromString(layout.cube)
   private val measureNames = layout.measures.map(UTF8String.fromString)
-  // dims = non-region axes, name-sorted (matches CubePipeline.normalized's
-  // sorted dim_* fold) with their 0-based token slots (slot 0 = "D").
+  // dims = non-region axes, name-sorted, with their 0-based token slots
+  // (slot 0 = "D").
   private val dimAxes: Seq[(String, Int)] = layout.axes.zipWithIndex.tail
     .map { case (a, i) => (a, i + 1) }.sortBy(_._1)
 
   // `time` and `value` are typed by Catalyst's own ANSI Cast, evaluated
-  // interpreted over a one-token row: the same casts CubeParser.parse
-  // applies (a measure to DECIMAL(18, declared scale) or DOUBLE, widened
-  // to its cube's type as array() coercion does there), then to the
-  // relation's `value` type. Built once per file and measure.
+  // interpreted over a one-token row: a measure to DECIMAL(18, declared
+  // scale) or DOUBLE, widened to its cube's type, then to the relation's
+  // `value` type. Built once per file and measure.
   private val token = new GenericInternalRow(1)
   private def cast(e: Expression, t: DataType): Expression =
     if (e.dataType == t) e else Cast(e, t, None, EvalMode.ANSI)
@@ -379,10 +378,14 @@ private[sources] class CubeFileReader(part: CubeFilePartition,
   private var current: InternalRow = _
   private var exhausted = false
 
-  /** Same predicate as `CubeParser.parse`'s data filter. */
+  /** Data records: "D;" prefix and not a header. A tag in slot 2 alone
+    * does NOT make a row a header — a data record whose first axis
+    * value collides with a tag is still data when it has the layout's
+    * exact record shape (token count AND an integer in the time slot;
+    * header D-rows carry a column NAME there). */
   private def isData(toks: Array[String]): Boolean =
     toks.length >= 2 && toks(0) == "D" &&
-      (!CubeParser.headerTags.contains(toks(1)) ||
+      (!headerTags.contains(toks(1)) ||
         (toks.length == expectedLen &&
           timeRe.matches(toks(nAxes + 1))))
 

@@ -1,13 +1,19 @@
 package graft
 
-import graft.plans.CubeParser
+import graft.plans.{CubeParser, CubePipeline}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 
-/** Golden-fixture test for the GENESIS cube parser (FIXTURES.md §B). */
+/** Golden-fixture test for the GENESIS cube parser (FIXTURES.md §B):
+  * the header rules of [[CubeParser]] and the data records as
+  * [[CubePipeline.parseAll]] reads them through the `genesis-cube` reader.
+  */
 class CubeParserSpec extends SparkSpec {
 
   private val fixture = getClass.getResource("/cube_12411_mini.csv").getPath
   private def bd(s: String) = new java.math.BigDecimal(s)
+  private def parse(path: String, cube: String) =
+    CubePipeline.parseAll(spark, Seq(path -> cube))
   private def layoutOf(path: String, cube: String) =
     CubeParser.layoutFromHeader(
       CubeParser.readHeaders(spark, Seq(path))(path), path, cube)
@@ -30,15 +36,17 @@ class CubeParserSpec extends SparkSpec {
   }
 
   test("data records parse to the normalized long form with declared-scale decimals") {
-    val df = CubeParser.parse(spark, fixture, "12411_mini")
+    val df = parse(fixture, "12411_mini")
     // BEVSTD declares 0 decimals → value is exact DECIMAL(18,0).
     assert(df.schema("value").dataType ==
       org.apache.spark.sql.types.DecimalType(18, 0))
-    val rows = df.orderBy("region", "dim_GES", "time").collect()
+    val rows = df.orderBy(col("region"), col("dims")("GES"), col("time")).collect()
     assert(rows.length == 6)
     // FIXTURES.md §B expected parse table:
-    assert(rows.head == Row("12411_mini", "02", 2019, "BEVSTD", bd("934846"), "e", "GESM"))
-    assert(rows.last == Row("12411_mini", "11", 2020, "BEVSTD", bd("1874432"), "p", "GESW"))
+    assert(rows.head == Row("12411_mini", "02", 2019, "BEVSTD", bd("934846"), "e",
+      Map("GES" -> "GESM")))
+    assert(rows.last == Row("12411_mini", "11", 2020, "BEVSTD", bd("1874432"), "p",
+      Map("GES" -> "GESW")))
   }
 
   test("multi-measure cubes explode to one row per measure with paired flags") {
@@ -54,9 +62,9 @@ class CubeParserSpec extends SparkSpec {
       "D;QEI;DINSG;JAHR;BEVSTD;FLAECHE",
       "D;01;2020;1000;e;34.25;p",
       "D;02;2020;2000;r;-;x").mkString("\n"))
-    val parsed = CubeParser.parse(spark, tmp.toString, "mm")
+    val parsed = parse(tmp.toString, "mm")
     // Mixed scales (0 and 2) widen to one common decimal across the
-    // measure structs — still exact, values carry their digits.
+    // measures — still exact, values carry their digits.
     val vt = parsed.schema("value").dataType
     assert(vt.isInstanceOf[org.apache.spark.sql.types.DecimalType], vt)
     val rows = parsed.orderBy("region", "measure").collect()
@@ -85,7 +93,7 @@ class CubeParserSpec extends SparkSpec {
       "D;DQI;M2;QKM;FEST",
       "D;QEI;DINSG;JAHR;M1;M2",
       "D;01;2020;1000;e;34.25;p").mkString("\n"))
-    val parsed = CubeParser.parse(spark, tmp.toString, "nodec")
+    val parsed = parse(tmp.toString, "nodec")
     assert(parsed.schema("value").dataType ==
       org.apache.spark.sql.types.DoubleType)
     val byM = parsed.collect().map(r => r.getString(3) -> r.get(4)).toMap
@@ -106,7 +114,7 @@ class CubeParserSpec extends SparkSpec {
       "D;QEI;DINSG;JAHR;M1",
       "D;DQA;2020;7;e",
       "D;01;2020;42;e").mkString("\n"))
-    val rows = CubeParser.parse(spark, tmp.toString, "tagclash")
+    val rows = parse(tmp.toString, "tagclash")
       .orderBy("region").collect()
     assert(rows.length == 2)
     assert(rows.map(_.getString(1)).toSeq == Seq("01", "DQA"))
@@ -141,7 +149,7 @@ class CubeParserSpec extends SparkSpec {
       "D;01;2020;-;-",
       "D;02;2020;...;x",
       "D;03;2020;42;e").mkString("\n"))
-    val rows = CubeParser.parse(spark, tmp.toString, "nulls")
+    val rows = parse(tmp.toString, "nulls")
       .orderBy("region").collect()
     assert(rows.map(_.get(4)).toSeq == Seq(null, null, bd("42")))
     assert(rows.map(_.getString(5)).toSeq == Seq("-", "x", "e"))

@@ -110,8 +110,8 @@ class CubePipelineSpec extends SparkSpec {
   }
 
   test("regionRollup aggregates AGS prefixes per level with flag-aware sums") {
-    val cells = CubePipeline.normalized(graft.plans.CubeParser.parse(
-      spark, graft.plans.CubeOps.ensureAgs(), "ags_mini"))
+    val cells = CubePipeline.parseAll(spark,
+      Seq(graft.plans.CubeOps.ensureAgs() -> "ags_mini"))
     val r = CubePipeline.regionRollup(cells, exclude = Set("p"))
       .collect()
       .map(rw => (rw.getAs[Int]("time"), rw.getAs[Int]("level"),
@@ -137,13 +137,10 @@ class CubePipelineSpec extends SparkSpec {
   }
 
   test("cube revision replay: newest download wins, per storage and per cell") {
-    import graft.plans.{CubeOps, CubeParser, CubePipeline}
-    val v1 = CubePipeline.normalized(CubeParser.parse(
-      spark, CubeOps.ensureFixture(), "12411"))
-    val v2 = CubePipeline.normalized(CubeParser.parse(
-      spark, CubeOps.ensureFixtureV2(), "12411"))
-    val area = CubePipeline.normalized(CubeParser.parse(
-      spark, CubeOps.ensureArea(), "area"))
+    import graft.plans.CubeOps
+    val v1 = CubePipeline.parseAll(spark, Seq(CubeOps.ensureFixture() -> "12411"))
+    val v2 = CubePipeline.parseAll(spark, Seq(CubeOps.ensureFixtureV2() -> "12411"))
+    val area = CubePipeline.parseAll(spark, Seq(CubeOps.ensureArea() -> "area"))
 
     // Storage side: v2 landing via replacePartitions replaces cube
     // 12411's whole partition, leaves the area cube untouched.

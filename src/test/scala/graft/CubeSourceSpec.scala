@@ -1,9 +1,8 @@
 package graft
 
-import graft.plans.{CubeOps, CubeParser, CubePipeline}
+import graft.plans.{CubeOps, CubePipeline}
 import graft.sources.CubeDataSource
 import org.apache.spark.SparkThrowable
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, StringType,
   StructType}
@@ -12,8 +11,8 @@ import java.nio.file.Files
 /** The `genesis-cube` DataSource V2 reader (sources/CubeDataSource):
   * executor-side schema-from-header, one partition per cube file, zero
   * driver jobs for N cubes, column pruning pushed into the reader —
-  * and, read through parseAll, the same schema and cells as the
-  * per-cube Column parser.
+  * and, read through parseAll, cells typed, rounded and nulled as
+  * stated per edge case.
   */
 class CubeSourceSpec extends SparkSpec {
 
@@ -22,7 +21,7 @@ class CubeSourceSpec extends SparkSpec {
   private def viaSource = spark.read.format("genesis-cube")
     .load(paths: _*)
 
-  // Edge cells for the parity tests, each cube in its own file: scales 1
+  // Edge cells for the parseAll tests, each cube in its own file: scales 1
   // and 2, a space-padded value, more decimals than declared, null
   // tokens, and a region equal to a header tag; a cube with an
   // undeclared measure; a value that overflows DECIMAL(18,0).
@@ -60,32 +59,28 @@ class CubeSourceSpec extends SparkSpec {
     "D;QEI;DINSG;JAHR;BEVSTD",
     "D;01;2020;12345678901234567890;e")
 
-  /** The per-cube Column parser's plan: one text scan per cube, unioned. */
-  private def columnParsed(cubes: Seq[(String, String)]) =
-    cubes.map { case (p, n) => CubePipeline.normalized(CubeParser.parse(spark, p, n)) }
-      .reduce(_.unionByName(_))
-
-  private def assertParity(cubes: Seq[(String, String)], valueType: DataType) = {
-    val viaScan = CubePipeline.parseAll(spark, cubes)
-    val viaColumns = columnParsed(cubes)
-    val shape = (df: DataFrame) => df.schema.map(f => f.name -> f.dataType)
-    assert(shape(viaScan) == shape(viaColumns), "schemas differ")
-    assert(viaScan.schema("value").dataType == valueType)
-    // Maps are not comparable in set operations: dims compare as JSON.
-    val cells = (df: DataFrame) => df.withColumn("dims", to_json(col("dims")))
-    assert(cells(viaScan).exceptAll(cells(viaColumns)).isEmpty &&
-      cells(viaColumns).exceptAll(cells(viaScan)).isEmpty,
-      "the genesis-cube reader and the Column parser disagree on cells")
-    viaScan
+  /** parseAll over `cubes`, asserting the type it gives `value`. */
+  private def parsedAs(cubes: Seq[(String, String)], valueType: DataType) = {
+    val df = CubePipeline.parseAll(spark, cubes)
+    assert(df.schema("value").dataType == valueType)
+    df
   }
 
-  test("parseAll's scan equals the per-cube Column-parser union") {
+  test("parseAll's scan types every edge cell and folds each cube's axes into dims") {
     // Scales 0 (12411), 2 and 1 (area, edge) widen to DECIMAL(20,2);
-    // area has no axis besides the region (empty dims).
+    // area and edge have no axis besides the region (empty dims).
     val declared = Seq(paths.head -> "12411_mini", paths(1) -> "area",
       edge -> "edge")
-    val all = assertParity(declared, DecimalType(20, 2))
+    val all = parsedAs(declared, DecimalType(20, 2))
     assert(all.count() == 18)
+    // Maps are not comparable in set operations: distinct on the driver.
+    val dims = all.select("cube", "dims").collect()
+      .groupBy(_.getString(0)).view
+      .mapValues(_.map(_.getMap[String, String](1).toMap).toSet).toMap
+    assert(dims == Map(
+      "12411_mini" -> Set(Map("GES" -> "GESM"), Map("GES" -> "GESW")),
+      "area" -> Set(Map.empty[String, String]),
+      "edge" -> Set(Map.empty[String, String])), dims)
     val e = all.filter(col("cube") === "edge")
       .select("region", "measure", "value", "quality").collect()
       .map(r => (r.getString(0), r.getString(1)) -> r).toMap
@@ -96,25 +91,21 @@ class CubeSourceSpec extends SparkSpec {
     assert(e(("DQI", "M1")).getDecimal(2).intValue == 7 && e(("DQI", "M2")).isNullAt(2))
     // One undeclared measure anywhere types every cube's value DOUBLE;
     // declared cubes still round to their scale first.
-    val dbl = assertParity(declared :+ (undeclared -> "nodec"), DoubleType)
+    val dbl = parsedAs(declared :+ (undeclared -> "nodec"), DoubleType)
     assert(dbl.filter(col("cube") === "edge" && col("region") === "01" &&
       col("measure") === "M2").head().getDouble(4) == 1.24)
   }
 
-  test("a value overflowing DECIMAL(18,s) fails both paths with one error class; " +
-    "the reader names the file") {
+  test("a DECIMAL(18,s) overflow fails out of range and the reader names the file") {
     def chain(t: Throwable) = Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
-    def condition(t: Throwable) = chain(t).collectFirst {
+    val err = intercept[Exception](
+      CubePipeline.parseAll(spark, Seq(overflow -> "big")).collect())
+    val condition = chain(err).collectFirst {
       case s: SparkThrowable if s.getCondition != null => s.getCondition
     }
-    val cubes = Seq(overflow -> "big")
-    val viaColumns = intercept[Exception](columnParsed(cubes).collect())
-    val viaScan = intercept[Exception](CubePipeline.parseAll(spark, cubes).collect())
-    assert(condition(viaColumns).exists(_.startsWith("NUMERIC_VALUE_OUT_OF_RANGE")),
-      viaColumns.toString)
-    assert(condition(viaScan) == condition(viaColumns), viaScan.toString)
-    assert(chain(viaScan).exists(t => Option(t.getMessage).exists(_.contains(overflow))),
-      s"reader error does not name $overflow: $viaScan")
+    assert(condition.exists(_.startsWith("NUMERIC_VALUE_OUT_OF_RANGE")), err.toString)
+    assert(chain(err).exists(t => Option(t.getMessage).exists(_.contains(overflow))),
+      s"reader error does not name $overflow: $err")
     // A file listed under two cube names is an error naming the file,
     // not a silent double parse.
     val twice = intercept[IllegalArgumentException](

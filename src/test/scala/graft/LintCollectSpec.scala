@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Planted-fixture drive of [[LintCollect]] (r16, r15 verdict #2): the
@@ -60,13 +65,23 @@ class LintCollectSpec extends AnyFunSuite {
     val scan = LintCollect.lintTree(root)
     assert(scan.failures.isEmpty, scan.failures.mkString("\n"))
     // r16 advice #3: the old green was vacuous — a charset bug made
-    // lintTree read zero files, so "no failures" proved nothing. Pin
-    // that the scan visited a tree-sized file count and saw the
-    // annotated call sites, so a silent-skip regression turns red.
-    assert(scan.files > 40, s"only ${scan.files} files visited — " +
-      "the main tree has ~50; a near-zero count means reads are failing")
-    assert(scan.sites >= 9, s"only ${scan.sites} call sites seen — " +
-      "the tree has 9 annotated bounded-collect sites")
+    // lintTree read zero files, so "no failures" proved nothing. Count
+    // the tree's files and call sites with a walk of this spec's own and
+    // require the scan to have seen exactly as many: a skipped file
+    // turns this red, and no hand-kept count needs editing when a
+    // collect is added or removed.
+    val walk = Files.walk(root.toPath)
+    val files = try walk.iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toList
+    finally walk.close()
+    // A call on a line that is not a comment line.
+    val site = """^(?!\s*(//|\*|/\*)).*\.collect(AsList)?\(\)""".r
+    val sites = files.map(f => Files.readString(f, StandardCharsets.UTF_8)
+      .split("\n", -1).count(site.findFirstIn(_).nonEmpty)).sum
+    assert(files.nonEmpty && sites > 0, s"walked ${files.size} files, $sites sites")
+    assert(scan.files == files.size, s"the scan read ${scan.files} of " +
+      s"${files.size} .scala files")
+    assert(scan.sites == sites, s"the scan saw ${scan.sites} of $sites call sites")
   }
 
   test("an unreadable file is a lint failure, not an empty scan") {

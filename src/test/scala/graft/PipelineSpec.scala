@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.CubeParser
+import graft.plans.CubePipeline
 import graft.sources.Sinks
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -109,11 +109,12 @@ class PipelineSpec extends SparkSpec {
     val fixture = getClass.getResource("/cube_12411_mini.csv").getPath
     val out = Files.createTempDirectory("pipeline").resolve("facts").toString
 
-    val parsed = CubeParser.parse(spark, fixture, "12411_mini")
+    val parsed = CubePipeline.parseAll(spark, Seq(fixture -> "12411_mini"))
     // Fact doc per (region, time, sex-dim): measures as a sorted map of
     // {value, quality} — the reference's nested fact shape.
     val facts = parsed
-      .groupBy("cube", "region", "time", "dim_GES")
+      .groupBy(col("cube"), col("region"), col("time"),
+        col("dims")("GES").as("dim_GES"))
       .agg(map_from_entries(sort_array(collect_list(
         struct(col("measure"), struct(col("value"), col("quality"))))))
         .as("measures"))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.CubeParser
+import graft.plans.CubePipeline
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -55,12 +55,13 @@ class PropertySpec extends SparkSpec {
           s"D;$r;$dm;$y;${v.toLong};$f;$m2s;$m2f"
         }
       java.nio.file.Files.writeString(file, lines.mkString("\n"))
-      val frame = CubeParser.parse(spark, file.toString, "prop")
+      val frame = CubePipeline.parseAll(spark, Seq(file.toString -> "prop"))
       // Declared scales 0 and 2 → one widened decimal value column.
       assert(frame.schema("value").dataType
         .isInstanceOf[org.apache.spark.sql.types.DecimalType])
       val parsed = frame
-        .select("region", "dim_DIM", "time", "measure", "value", "quality")
+        .select(col("region"), col("dims")("DIM"), col("time"), col("measure"),
+          col("value"), col("quality"))
         .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2),
           r.getString(3), Option(r.getDecimal(4)).map(_.doubleValue),
           r.getString(5))).toSet
