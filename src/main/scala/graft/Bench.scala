@@ -5,10 +5,11 @@ import scala.util.control.NonFatal
 
 /** Benchmark main (`runMain graft.Bench [keys…]`), and the one home of
   * what the harness mains share: env defaults, key selection and the
-  * round-file reader. With no keys it sweeps all of them and writes the
-  * round files; named keys are timed under the same policy and print
-  * the same two lines, but write no round file, so a subset run can
-  * never shrink the board.
+  * round-file reader. With no keys it sweeps all of them and writes
+  * this run's readings to `BENCH_FRESH_r{N}.json`, the harness's only
+  * bench record; named keys are timed under the same policy and print
+  * the same two lines, but write no file, so a subset run can never
+  * stand in for a sweep.
   */
 object Bench {
 
@@ -45,88 +46,35 @@ object Bench {
   private val roundSuffix = """_r(\d+)\.json$""".r
 
   /** Round number of a round file (`BENCH_r07.json`,
-    * `BENCH_DETAIL_r8.json`, `CORRECTNESS_r18.json`, ...); 0 when the
+    * `BENCH_FRESH_r19.json`, `CORRECTNESS_r18.json`, ...); 0 when the
     * name carries none.
     */
   private[graft] def roundOf(f: java.io.File): Int =
     roundSuffix.findFirstMatchIn(f.getName)
       .flatMap(_.group(1).toIntOption).getOrElse(0)
 
-  /** Identity of the code a sweep measured: SHA-256 over the sorted
-    * relative paths and bytes of every file under `root/src/main`, plus
-    * `root/build.sbt`. Any source edit — a comment included — yields a
-    * new id. Empty when `src/main` is missing, which merges nothing.
-    */
-  private[graft] def buildId(root: java.io.File): String = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val base = root.toPath
-    val main = base.resolve("src/main")
-    if (!Files.isDirectory(main)) return ""
-    val walk = Files.walk(main)
-    val files =
-      try walk.iterator().asScala.filter(Files.isRegularFile(_)).toVector
-      finally walk.close()
-    val all = (files ++ Some(base.resolve("build.sbt")).filter(Files.isRegularFile(_)))
-      .map(p => base.relativize(p).toString -> p)
-      .sortBy(_._1)
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    all.foreach { case (rel, p) =>
-      val bytes = Files.readAllBytes(p)
-      // Path and length frame each file, so no two trees hash alike
-      // by shifting bytes across a file boundary.
-      md.update(s"$rel\u0000${bytes.length}\u0000".getBytes("UTF-8"))
-      md.update(bytes)
-    }
-    md.digest().map(b => f"$b%02x").mkString
-  }
-
   private val timePair = """"([A-Za-z0-9_]+)":\s*(-?[0-9]+(?:\.[0-9]+)?)""".r
 
-  /** Per-key times of a BENCH_DETAIL / BENCH_FRESH file: the numeric
-    * pairs before the embedded summary. Whitespace after the colon is
-    * allowed (the r8 board was written as `"key": 0.195`).
+  /** Per-key times of a bench round file: the numeric pairs before
+    * the embedded summary. Whitespace after the colon is allowed (the
+    * r8 round file was written as `"key": 0.195`).
     */
   private[graft] def queryTimes(txt: String): Map[String, Double] =
     timePair.findAllMatchIn(txt.split("\"summary\"").head)
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
 
-  /** The `"build"` id a detail file was written under, if any. */
-  private def buildOf(txt: String): Option[String] =
-    """"build":"([0-9a-f]*)"""".r.findFirstMatchIn(txt).map(_.group(1))
-
-  /** Same-build min-merge against ONE prior detail file. Prior readings
-    * count only when the prior file was written by the same non-empty
-    * [[buildId]]; anything else measured other code and merges
-    * nothing. This run's error sentinel always wins (broken ≠ fast),
-    * and the merged key set is exactly this run's, so a prior key that
-    * is no longer declared is dropped.
-    */
-  private[graft] def mergeDetail(
-      current: Seq[(String, Double)],
-      build: String,
-      priorTxt: String): Seq[(String, Double)] = {
-    val prior =
-      if (build.nonEmpty && buildOf(priorTxt).contains(build))
-        queryTimes(priorTxt).filter(_._2 >= 0)
-      else Map.empty[String, Double]
-    current.map { case (k, v) =>
-      k -> (if (v < 0) -1.0 else math.min(v, prior.getOrElse(k, v)))
-    }
-  }
-
   /** Round number this run belongs to: committed artifacts exist for
     * every PAST round (BENCH_r{N}.json is committed at round end, and
-    * this main writes BENCH_DETAIL_r{N}.json during round N), so the
+    * this main writes BENCH_FRESH_r{N}.json during round N), so the
     * current round is one past the highest committed BENCH_r*, or the
-    * highest BENCH_DETAIL_r* if that's newer (a re-run within the same
-    * round overwrites its own detail file rather than advancing).
+    * highest BENCH_FRESH_r* if that's newer (a re-run within the same
+    * round overwrites its own file rather than advancing).
     */
   private def currentRound(): Int = {
     val committed = benchFiles("BENCH_r\\d+\\.json").map(roundOf)
-    val detail = benchFiles("BENCH_DETAIL_r\\d+\\.json").map(roundOf)
+    val fresh = benchFiles("BENCH_FRESH_r\\d+\\.json").map(roundOf)
     math.max(committed.maxOption.getOrElse(0) + 1,
-      detail.maxOption.getOrElse(1))
+      fresh.maxOption.getOrElse(1))
   }
 
   private def loadavg(): Double =
@@ -134,21 +82,8 @@ object Bench {
       .split(" ").head.toDouble
     catch { case NonFatal(_) => -1.0 }
 
-  /** One stderr line naming what failed; artifact I/O never fails the
-    * bench and never adds to stdout.
-    */
-  private def warn(what: String, e: Throwable): Unit =
-    System.err.println(s"bench: $what failed: $e")
-
   def main(args: Array[String]): Unit = {
     val keys = selectKeys(args.toSeq)
-    val sweep = args.isEmpty
-    // Taken before anything runs: the id describes the tree the sweep
-    // was launched from, even if a file is edited mid-sweep.
-    val build =
-      if (!sweep) ""
-      else try buildId(new java.io.File("."))
-      catch { case NonFatal(e) => warn("build id of src/main", e); "" }
     val spark = GraftSession.local(cpus)
     val loadBefore = loadavg()
     // Full materialization via the noop sink, NOT count(): under
@@ -224,9 +159,9 @@ object Bench {
     // kept, so a single combined line loses its HEAD — including
     // "metric":"total" — to truncation (BENCH_r04/r05 both landed
     // parsed:null this way). Head-truncating the map line is harmless
-    // (the full map goes to BENCH_FRESH/BENCH_DETAIL and the summary
-    // repeats the headline), but the summary line must always fit the
-    // tail window intact, so it is last and <400 bytes.
+    // (the full map goes to BENCH_FRESH and the summary repeats the
+    // headline), but the summary line must always fit the tail window
+    // intact, so it is last and <400 bytes.
     println(s"""{"metric":"queries","queries":${timesJson(results)},"sf":"$sfDir"}""")
     // loadavg before/after make a loaded run self-describing: a high
     // pair says "numbers include ambient noise", without guessing.
@@ -237,33 +172,18 @@ object Bench {
     // where 30 keys errored out, without parsing prose.
     val summary = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nqueries":${results.size},"timed":${results.count(_._2 >= 0)},"errors":$errs,"retried":$retr,"loadavg_before":${fmt(loadBefore)},"loadavg_after":${fmt(loadavg())},"sf":"$sfDir"}"""
     println(summary)
-    // A sweep writes two artifacts in the working directory, both
-    // carrying the build id they measured (a subset run writes none):
-    //   - BENCH_FRESH_r{N}.json: THIS run's readings verbatim,
-    //     overwritten whole on every run — the round measurement;
-    //   - BENCH_DETAIL_r{N}.json: the round board. A re-run of the SAME
-    //     build min-merges per key into it (another sweep of unchanged
-    //     code is the one remedy for load noise); a run of any other
-    //     build replaces it, so the board only ever holds readings of
-    //     the code it names.
-    if (sweep) {
-      val round = currentRound()
-      // Files.writeString, not PrintWriter: a PrintWriter swallows write
-      // errors, and a failed write must name itself on stderr.
-      def write(path: String, times: Seq[(String, Double)]): Unit =
-        try java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-          s"""{"queries":${timesJson(times)},"build":"$build","summary":$summary}""" + "\n")
-        catch { case NonFatal(e) => warn(s"write of $path", e) }
-      val detail = s"BENCH_DETAIL_r$round.json"
-      val prior =
-        try {
-          val f = new java.io.File(detail)
-          if (!f.exists()) ""
-          else java.nio.file.Files.readString(f.toPath,
-            java.nio.charset.StandardCharsets.UTF_8)
-        } catch { case NonFatal(e) => warn(s"read of $detail", e); "" }
-      write(detail, mergeDetail(results, build, prior))
-      write(s"BENCH_FRESH_r$round.json", results)
+    // A sweep writes one artifact in the working directory (a subset
+    // run writes none): BENCH_FRESH_r{N}.json, THIS run's readings
+    // verbatim, overwritten whole on every sweep. Nothing is merged
+    // with an earlier run; the remedy for a run hit by load is another
+    // sweep. A failed write never fails the bench and never adds to
+    // stdout: it names itself in one stderr line. Files.writeString,
+    // not PrintWriter, which would swallow the error.
+    if (args.isEmpty) {
+      val path = s"BENCH_FRESH_r${currentRound()}.json"
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+        s"""{"queries":${timesJson(results)},"summary":$summary}""" + "\n")
+      catch { case NonFatal(e) => System.err.println(s"bench: write of $path failed: $e") }
     }
     spark.stop()
   }

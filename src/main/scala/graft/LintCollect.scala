@@ -28,8 +28,8 @@ package graft
   * is itself testable (the spec checks both against its own walk of
   * the tree).
   *
-  * No SparkSession — a plain source scan, milliseconds; runs with
-  * [[LintBench]] at round close.
+  * No SparkSession — a plain source scan, milliseconds; run it next to
+  * [[LintBench]] after a full bench sweep.
   */
 object LintCollect {
 

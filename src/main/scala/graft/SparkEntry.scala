@@ -30,8 +30,8 @@ object SparkEntry {
         count(lit(1)).as("n"))
       .orderBy("l_returnflag", "l_linestatus")
 
-  private val modules: Seq[(Map[String, (SparkSession, String) => DataFrame],
-                            Map[String, String])] = Seq(
+  private[graft] val modules: Seq[(Map[String, (SparkSession, String) => DataFrame],
+                                   Map[String, String])] = Seq(
     (ScanOps.queries, ScanOps.oracle),
     (FilterOps.queries, FilterOps.oracle),
     (AggOps.queries, AggOps.oracle),

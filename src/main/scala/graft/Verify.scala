@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [keys…]")
     val Array(sfDir, outDir) = args.take(2)
     // Extra args = run only those keys (local iteration); the driver
     // passes exactly two, so it always dumps the full map.
